@@ -387,12 +387,14 @@ group by md5(text)
 
 def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
-    sig = dedup.minhash_signature_wide(d, k=5, num_perm=MINHASH_PERM)
-    return sig.select(
+    sig = F.col("signature")
+    return dedup.minhash_signatures(
+        d, "doc_id", "text", 5, MINHASH_PERM
+    ).select(
         F.col("_id").alias("doc_id"),
-        F.col("s0").alias("sig_0"),
-        F.col("s1").alias("sig_1"),
-        F.col(f"s{MINHASH_PERM - 1}").alias("sig_last"),
+        sig[0].alias("sig_0"),
+        sig[1].alias("sig_1"),
+        sig[MINHASH_PERM - 1].alias("sig_last"),
     )
 
 
@@ -518,20 +520,17 @@ def q_rescue_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the sig table broadcast (dedup.screen_pairs_by_sig — same per-pair
     # predicate as screen_min_eq, measured 2.4x faster at 2-row banding
     # where band multiplicity would re-run the screen per colliding band).
-    sig = dedup.minhash_signature_wide(
+    sig = dedup.minhash_signatures(
         docs, "doc_id", "text", 5, SIG_PERM
     ).localCheckpoint(eager=False)
-    band = dedup.bands_from_wide_sig(
-        sig, num_perm=SIG_PERM, num_bands=_RESCUE_BANDS,
-        band_perm=MINHASH_PERM,
-    )
+    band = blocking.band_rows(sig, _RESCUE_BANDS, MINHASH_PERM)
     probe = docs.where(
         (F.col("doc_id") % _RESCUE_PROBE_MOD) == _RESCUE_PROBE_RES
     ).select("doc_id")
     raw = dedup.pairs_from_band_rows(
         band, bucket_cap=_RESCUE_BUCKET_CAP, probe_ids=probe,
     )
-    return dedup.screen_pairs_by_sig(raw, sig, SIG_PERM, SCREEN_MIN_EQ)
+    return dedup.screen_pairs_by_sig(raw, sig, SCREEN_MIN_EQ)
 
 
 _RESCUE_BAND_ROWS = "\n  union all\n".join(
@@ -556,21 +555,20 @@ def q_er_rescue_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     closure), so the rescue pass's end-to-end cluster output — not just
     its blocking stage — is hash-checked against DuckDB."""
     d = _docs_aug(spark, sf_dir)
-    # ONE wide-signature computation feeds both band schemes (the
+    # ONE signature computation feeds both band schemes (the
     # orchestrator's s1_signatures pattern, pipeline/orchestrator.py).
-    # Lazily localCheckpointed: the signature lineage (gram explode +
-    # md5 + 64 min-aggregates) otherwise re-executes once per plan
+    # Lazily localCheckpointed: the signature lineage (gram md5s + the
+    # Arrow minima pass) otherwise re-executes once per plan
     # branch, and this query references it from the main-pass bucket
     # sizing, both pair-join sides, the edge attach, every CC iteration's
     # re-execution, AND the rescue banding — the >=8-branch regime where
     # materialization measured 2.6x faster (see dedup_minhash_lsh's
     # docstring for the paired-run evidence and the 3-branch counter-case).
-    sig = dedup.minhash_signature_wide(
+    sig = dedup.minhash_signatures(
         d, "doc_id", "text", 5, SIG_PERM
     ).localCheckpoint(eager=False)
-    band_main = dedup.bands_from_wide_sig(
-        sig, num_perm=SIG_PERM, num_bands=MINHASH_BANDS,
-        band_perm=MINHASH_PERM, carry_sig=True,
+    band_main = blocking.band_rows(
+        sig, MINHASH_BANDS, MINHASH_PERM, carry_sig=True
     )
     # cand is read by THREE executions (main-pass edges, and — because
     # connected_components checkpoints only its own input — again under
@@ -587,17 +585,14 @@ def q_er_rescue_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe = d.select("doc_id").join(
         comps0.select(F.col("id").alias("doc_id")), "doc_id", "left_anti"
     )
-    band = dedup.bands_from_wide_sig(
-        sig, num_perm=SIG_PERM, num_bands=_RESCUE_BANDS,
-        band_perm=MINHASH_PERM,
-    )
+    band = blocking.band_rows(sig, _RESCUE_BANDS, MINHASH_PERM)
     # Distinct-first screen for the r=2 rescue banding (same predicate,
     # same result set as screen_min_eq in-join — see screen_pairs_by_sig).
     r_cand = dedup.screen_pairs_by_sig(
         dedup.pairs_from_band_rows(
             band, bucket_cap=ORACLE_UNCAPPED, probe_ids=probe,
         ),
-        sig, SIG_PERM, SCREEN_MIN_EQ,
+        sig, SCREEN_MIN_EQ,
     )
     r_new = r_cand.join(cand, ["id_1", "id_2"], "left_anti")
     r_edges = _cand_to_edges(d, r_new)

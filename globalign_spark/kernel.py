@@ -108,15 +108,6 @@ class CompiledParams:
         return n * self.delta_d + m * self.delta_i - cost
 
 
-import os as _os
-
-# "bk" (default): Brent-Kung work-efficient scan (~4n element touches);
-# "hs": Hillis-Steele doubling scan (~n*log2(n) touches, fewer kernel
-# launches); "acc": np.minimum.accumulate (single pass, scalar loop).
-# bk wins under many-core memory contention AND single-core at B >= ~200.
-_SCAN_MODE = _os.environ.get("GA_SCAN", "bk")
-
-
 def _prefix_min_inplace(W: np.ndarray) -> None:
     """In-place inclusive prefix-min along axis 0.
 
@@ -128,16 +119,7 @@ def _prefix_min_inplace(W: np.ndarray) -> None:
     every core runs a scorer task. Overlapping in/out is safe for
     min-scans: extra propagation only ever re-mins valid prefix values.
     """
-    if _SCAN_MODE == "acc":
-        np.minimum.accumulate(W, axis=0, out=W)
-        return
     L = W.shape[0]
-    if _SCAN_MODE == "hs":
-        s = 1
-        while s < L:
-            np.minimum(W[s:], W[:-s], out=W[s:])
-            s <<= 1
-        return
     d = 1
     while d < L:  # up-sweep: block roots hold block minima
         a = W[2 * d - 1 :: 2 * d]
@@ -151,6 +133,8 @@ def _prefix_min_inplace(W: np.ndarray) -> None:
         np.minimum(a, b, out=a)
         d >>= 1
 
+
+import os as _os
 
 # Myers bit-parallel path toggle (A/B lever for benches; on by default).
 _MYERS_ON = _os.environ.get("GA_MYERS", "1") != "0"

@@ -5,22 +5,31 @@ exact DuckDB-SQL twin (hash functions are md5-based specifically so both
 engines compute identical values — xxhash64 exists only in Spark):
 
   - exact:        md5(text) groupBy, min-doc_id survivor
-  - MinHash+LSH:  k-char shingles -> P md5-min signatures -> banded buckets
-                  -> candidate pairs (shingle->minhash->band->bucket-join)
+  - MinHash+LSH:  distinct k-char grams -> md5 gram hash mod 2^31-1 -> P
+                  universal-hash minima (:func:`minhash_signatures`) ->
+                  banded buckets -> candidate pairs
   - SimHash:      per-token md5-nibble bits, majority vote -> 32-bit
                   signature; near-dup = small Hamming distance
   - n-gram Jaccard: within-block pairwise |A∩B|/|A∪B| on distinct k-grams
 
-Scale notes: everything is built-in array/hash expressions (JVM-side);
-signatures are computed without exploding shingles (arrays stay packed per
-row until the band explode, which is exactly B rows per doc). Band-bucket
-self-joins are capped the same way as pipeline/blocking.py.
+:func:`minhash_signatures` is the only MinHash family in the engine: the
+batch pipeline's ``s1_signatures`` stage, incremental ER, streaming,
+curation and every MinHash/ER oracle query compute their signatures with
+it, and all of them band with ``pipeline.blocking.band_keys_col``. Band
+keys never reach a query output, so the SQL twins' md5 band keys prove
+the same pair sets. Signatures are computed without exploding grams
+(arrays stay packed per row until the band explode, which is exactly B
+rows per doc). Band-bucket self-joins are capped the same way as
+pipeline/blocking.py.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType
 
 
 def kgrams(text: Column, k: int = 5) -> Column:
@@ -39,31 +48,6 @@ def dedup_exact(df: DataFrame, id_col: str = "doc_id",
             F.min(id_col).alias("survivor_id"),
             F.count("*").alias("n_dupes"),
         )
-    )
-
-
-def minhash_signature(text: Column, k: int = 5, num_perm: int = 16) -> Column:
-    """array<long> of P minhash values: sig_j = min over shingles s of
-    (a_j*h(s) + b_j) mod p (same scheme as :func:`minhash_signature_wide`,
-    bit-identical in any engine with md5 + hex decode).
-
-    NOTE: higher-order-function lambdas are interpreted (not codegen'd) in
-    Spark — fine for a per-row signature column on moderate rows; the bulk
-    pipeline uses :func:`minhash_signature_wide` (explode + codegen md5 +
-    hash aggregate), which is both faster and shuffle-scalable.
-    """
-    coefs = minhash_coefs(num_perm)
-    hashes = F.transform(kgrams(text, k), lambda s: gram_hash(s))
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(
-                    hashes,
-                    lambda h: (F.lit(a) * h + F.lit(b)) % MINHASH_P,
-                )
-            )
-            for a, b in coefs
-        ]
     )
 
 
@@ -100,71 +84,40 @@ def gram_hash(g: Column) -> Column:
     )
 
 
-def minhash_signature_wide(
+def minhash_signatures(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 5,
     num_perm: int = 16,
 ) -> DataFrame:
-    """(_id, s0..s{P-1}) minhash signature as P long columns.
+    """(_id, signature array<long>): the one MinHash signature function.
 
-    One md5 per distinct gram; permutation j is the universal hash
-    (a_j*h + b_j) mod p over the gram hash (see MINHASH_P). The P
-    per-document minima are P ``min`` aggregates over one gram explode:
-    partial (map-side) aggregation means the shuffle carries one row per
-    doc per partition — no P-way row multiplication, no string
-    comparisons."""
-    # Parquet scans of small-byte/large-compute tables give one input split;
-    # without this repartition the gram explode and every md5 would run
-    # in a single task (bytes-based splitting is blind to per-row compute).
-    spark = df.sparkSession
-    df = df.repartition(spark.sparkContext.defaultParallelism * 2)
-    grams = df.select(
-        F.col(id_col).alias("_id"),
-        F.explode(kgrams(F.col(text_col), k)).alias("g"),
+    sig_j = min over the distinct k-grams g of (a_j * gram_hash(g) + b_j)
+    mod p, with (a_j, b_j) = :func:`minhash_coefs` — the same formula the
+    DuckDB twins spell out in SQL. The grams are hashed JVM-side (md5 has
+    no Python round trip) and the P minima are taken in one map-only
+    Arrow pass, so no gram row is ever exploded or shuffled. NULL text
+    gives a NULL signature (and :func:`pipeline.blocking.band_keys_col`
+    then gives it no band rows); ``""`` hashes its single empty gram like
+    the SQL twin does."""
+    coefs = np.array(minhash_coefs(num_perm), dtype=np.int64)
+    a, b = coefs[:, :1], coefs[:, 1:]
+
+    @F.pandas_udf(ArrayType(LongType()))
+    def minima(hashes: pd.Series) -> pd.Series:
+        # a_j * h < 2^62 (both < p), so int64 arithmetic is exact.
+        return pd.Series([
+            None if h is None else ((a * h + b) % MINHASH_P).min(axis=1)
+            for h in hashes
+        ])
+
+    text = F.col(text_col)
+    hashes = F.when(
+        text.isNotNull(), F.transform(kgrams(text, k), gram_hash)
     )
-    hashed = grams.select("_id", gram_hash(F.col("g")).alias("_h"))
-    coefs = minhash_coefs(num_perm)
-    return hashed.groupBy("_id").agg(
-        *[
-            F.min((F.lit(a) * F.col("_h") + F.lit(b)) % MINHASH_P).alias(
-                f"s{j}"
-            )
-            for j, (a, b) in enumerate(coefs)
-        ]
-    )
-
-
-def minhash_signature_rows(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-    num_perm: int = 16,
-) -> DataFrame:
-    """(_id, j, mh) long-form signature rows: the wide aggregate unpivoted
-    with ``stack`` (a projection — no extra shuffle)."""
-    wide = minhash_signature_wide(df, id_col, text_col, k, num_perm)
-    stack_args = ", ".join(f"{j}, s{j}" for j in range(num_perm))
-    return wide.selectExpr(
-        "_id", f"stack({num_perm}, {stack_args}) as (j, mh)"
-    )
-
-
-def band_hashes(signature: Column, num_bands: int, rows_per_band: int) -> Column:
-    """array<string> of per-band keys: md5 of the concatenated band slice."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_bands - 1)),
-        lambda b: F.md5(
-            F.concat(
-                b.cast("string"),
-                F.lit("|"),
-                F.array_join(
-                    F.slice(signature, b * rows_per_band + 1, rows_per_band), ","
-                ),
-            )
-        ),
+    return df.select(
+        F.col(id_col).alias("_id"), minima(hashes).alias("signature")
     )
 
 
@@ -178,12 +131,13 @@ def lsh_band_rows(
     band_perm: int | None = None,
     carry_sig: bool = False,
 ) -> DataFrame:
-    """(_id, band_id, band_hash): B banded-signature rows per document.
+    """(_id, band_id, band_hash[, sig]): B banded-signature rows per
+    document — :func:`minhash_signatures` banded by
+    :func:`pipeline.blocking.band_rows`, the same key expression the
+    batch pipeline bands its ``s1_signatures`` table with.
 
-    Band key: md5(band_id | s_j0,s_j1,...) straight from the wide signature
-    columns — pure codegen projection, then one posexplode of B band rows
-    per doc. This is the table a production deployment checkpoints (bucketed
-    by (band_id, band_hash)) so that incremental batches probe it without
+    This is the table a production deployment checkpoints (bucketed by
+    (band_id, band_hash)) so that incremental batches probe it without
     recomputing signatures for the whole corpus (pipeline/incremental.py).
 
     ``band_perm`` bands over only the FIRST band_perm signature positions
@@ -196,53 +150,12 @@ def lsh_band_rows(
     shuffle weight; the screen it feeds runs BEFORE the pair expansion
     ever hits an exchange).
     """
-    sig = minhash_signature_wide(df, id_col, text_col, k, num_perm)
-    return bands_from_wide_sig(
-        sig, num_perm=num_perm, num_bands=num_bands,
-        band_perm=band_perm, carry_sig=carry_sig,
-    )
+    from ..pipeline.blocking import band_rows
 
-
-def bands_from_wide_sig(
-    sig: DataFrame,
-    num_perm: int = 16,
-    num_bands: int = 4,
-    band_perm: int | None = None,
-    carry_sig: bool = False,
-) -> DataFrame:
-    """Band a precomputed wide signature frame (_id, s0..s{P-1}) into
-    (_id, band_id, band_hash[, sig]) rows — the projection tail of
-    :func:`lsh_band_rows`, callable directly so multiple band schemes
-    (e.g. the main 4x4 pass and the singleton-rescue 8x2 pass) derive
-    from ONE signature computation instead of re-sharding and re-hashing
-    the corpus per scheme. Pure codegen: an md5-of-concat array build
-    plus one posexplode, no shuffle."""
-    bp = band_perm or num_perm
-    rows = bp // num_bands
-    band_cols = F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    F.lit(str(b)),
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.col(f"s{j}").cast("string")
-                            for j in range(b * rows, (b + 1) * rows)
-                        ],
-                    ),
-                )
-            )
-            for b in range(num_bands)
-        ]
+    return band_rows(
+        minhash_signatures(df, id_col, text_col, k, num_perm),
+        num_bands, band_perm or num_perm, carry_sig=carry_sig,
     )
-    out = ["_id", F.posexplode(band_cols).alias("band_id", "band_hash")]
-    if carry_sig:
-        out.append(
-            F.array(*[F.col(f"s{j}") for j in range(num_perm)]).alias("sig")
-        )
-    return sig.select(*out)
 
 
 def dedup_minhash_lsh(
@@ -309,11 +222,10 @@ def sig_eq_count(sig_1: Column, sig_2: Column) -> Column:
 def screen_pairs_by_sig(
     pairs: DataFrame,
     sig: DataFrame,
-    num_perm: int,
     min_eq: int,
 ) -> DataFrame:
-    """Distinct-first signature screen: keep (id_1, id_2) pairs whose wide
-    signatures (``sig`` = (_id, s0..s{P-1}), :func:`minhash_signature_wide`)
+    """Distinct-first signature screen: keep (id_1, id_2) pairs whose
+    signatures (``sig`` = (_id, signature), :func:`minhash_signatures`)
     agree on >= ``min_eq`` positions.
 
     The same per-pair predicate as ``pairs_from_band_rows(screen_min_eq=...)``
@@ -330,18 +242,15 @@ def screen_pairs_by_sig(
     broadcast-probe shape; the broadcast is safe because callers pass the
     corpus-bounded signature frame of an oracle-scale table — production
     code uses _pair_est_jaccard, which guards on corpus row count."""
-    arr = sig.select(
-        "_id",
-        F.array(*[F.col(f"s{j}") for j in range(num_perm)]).alias("_s"),
-    )
+    arr = sig.select("_id", "signature")
     return (
         pairs.join(
             F.broadcast(arr.select(F.col("_id").alias("id_1"),
-                                   F.col("_s").alias("_s1"))), "id_1"
+                                   F.col("signature").alias("_s1"))), "id_1"
         )
         .join(
             F.broadcast(arr.select(F.col("_id").alias("id_2"),
-                                   F.col("_s").alias("_s2"))), "id_2"
+                                   F.col("signature").alias("_s2"))), "id_2"
         )
         .where(sig_eq_count(F.col("_s1"), F.col("_s2")) >= F.lit(min_eq))
         .select("id_1", "id_2")

@@ -3,11 +3,17 @@
 Two complementary blocking strategies, both shuffle-disciplined for the
 10^12-row regime (SURVEY.md §2.4 J1-J3):
 
-1. **MinHash LSH bands** (primary, text-similarity driven). Character
-   shingles -> xxhash64 (JVM-side) -> P permutation minima computed in one
-   Arrow-vectorized numpy pass -> band hashes -> posexplode -> self-join on
-   (band_id, band_hash). Bucket-size capping keeps any band bucket from
-   going quadratic; dropped buckets are *counted*, not silently discarded.
+1. **MinHash LSH bands** (primary, text-similarity driven). The corpus
+   signature table comes from :func:`ops.dedup.minhash_signatures` —
+   distinct k-char grams, md5 gram hashes mod 2^31-1 (JVM-side), P
+   universal-hash minima in one map-only Arrow pass — the same family
+   streaming, incremental ER and the DuckDB-twinned oracle queries use.
+   The orchestrator checkpoints it as ``s1_signatures``; everything here
+   starts from that table. :func:`band_rows` turns it into (band_id,
+   band_hash) rows with the one band-key expression
+   (:func:`band_keys_col`), followed by a self-join on the bucket key.
+   Bucket-size capping keeps any band bucket from going quadratic;
+   dropped buckets are *counted*, not silently discarded.
 
 2. **Sorted-neighborhood within host** (secondary, URL-structure driven).
    Instead of an all-pairs self-join per host — which explodes on hot hosts
@@ -24,17 +30,12 @@ this layer is new, Spark-idiomatic design.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
 
-# Mersenne prime 2^61 - 1: universal-hash modulus for the permutations.
-_MERSENNE = (1 << 61) - 1
+from ..ops.dedup import sig_eq_count
 
 # Corpus-size guard for broadcasting the 15-bit-truncated signature table
 # in the pair screen (see _pair_est_jaccard): ~300 B/doc -> ~600 MB at the
@@ -43,105 +44,59 @@ _MERSENNE = (1 << 61) - 1
 _SIG_BROADCAST_MAX_DOCS = 2_000_000
 
 
-def shingle_hashes(text, k: int = 5):
-    """Distinct k-char shingle hashes of a text column (JVM-side only).
-
-    sequence+transform+xxhash64: no Python, no explode (array stays packed
-    per row, so no shuffle amplification before the signature step).
-    """
-    idx = F.sequence(F.lit(1), F.greatest(F.length(text) - (k - 1), F.lit(1)))
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.xxhash64(F.substr(text, i, F.lit(k))))
+def band_keys_col(signature, num_bands: int, width: int):
+    """array of per-band keys over the first ``width`` signature
+    positions: band b = xxhash64(b, slice b of ``width // num_bands``
+    rows), all JVM-side. NULL for a NULL signature, so a document without
+    text has no band rows."""
+    rows = width // num_bands
+    return F.when(
+        signature.isNotNull(),
+        F.transform(
+            F.sequence(F.lit(0), F.lit(num_bands - 1)),
+            lambda bidx: F.xxhash64(bidx, F.slice(signature, bidx * rows + 1, rows)),
+        ),
     )
 
 
-def _perm_params(num_perm: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
-    rng = np.random.Generator(np.random.Philox(seed))
-    a = rng.integers(1, _MERSENNE, size=num_perm, dtype=np.int64)
-    b = rng.integers(0, _MERSENNE, size=num_perm, dtype=np.int64)
-    return a, b
-
-
-def minhash_signature_col(df: DataFrame, hashes_col: str, num_perm: int = 64,
-                          seed: int = 1) -> DataFrame:
-    """Append ``signature: array<long>`` (length num_perm) from a column of
-    shingle-hash arrays. One Arrow-vectorized pandas pass: for each row,
-    sig_j = min_s ((a_j * h_s + b_j) mod M) over its shingle hashes s.
-    """
-    a, b = _perm_params(num_perm, seed)
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def sig(hs: pd.Series) -> pd.Series:
-        out = []
-        au = a.astype(np.uint64)
-        bu = b.astype(np.uint64)
-        for h in hs:
-            hv = np.asarray(h, dtype=np.uint64)
-            if hv.size == 0:
-                out.append(np.zeros(num_perm, dtype=np.int64))
-                continue
-            # (a*h + b) mod M, computed in uint64 with explicit mod to stay
-            # exact: reduce h first, then one Barrett-free double mod.
-            vals = (hv[None, :] % _MERSENNE) * (au[:, None] % _MERSENNE)
-            vals = (vals % _MERSENNE + bu[:, None]) % _MERSENNE
-            out.append(vals.min(axis=1).astype(np.int64))
-        return pd.Series(out)
-
-    return df.withColumn("signature", sig(F.col(hashes_col)))
-
-
-def band_keys_col(signature, num_bands: int, num_perm: int):
-    """array of per-band hashes: band b = xxhash64 over its signature slice
-    (array slicing + xxhash64 of an array column — JVM-side)."""
-    rows = num_perm // num_bands
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_bands - 1)),
-        lambda bidx: F.xxhash64(bidx, F.slice(signature, bidx * rows + 1, rows)),
-    )
-
-
-def corpus_signatures(
-    df: DataFrame,
-    id_col: str = "url",
-    text_col: str = "norm_text",
-    shingle_k: int = 5,
-    num_perm: int = 64,
-    seed: int = 1,
+def band_rows(
+    sig_df: DataFrame, num_bands: int, width: int, carry_sig: bool = False
 ) -> DataFrame:
-    """(_id, signature) MinHash signature table for the corpus — the ONE
-    shingle+hash+permutation-minima pass every banding scheme derives
-    from. The orchestrator checkpoints this as ``s1_signatures`` so the
-    main banding pass, its signature screen, AND the singleton-rescue
-    re-banding (s4b) all read a parquet scan instead of each re-paying
-    the full-corpus map pass — at 10^12 rows, shingling + P permutation
-    minima is the most expensive narrow transformation in the pipeline,
-    and without sharing it the rescue pass runs it a second time over
-    the entire corpus for a probe set that is a few percent of it.
-    """
-    return minhash_signature_col(
-        df.select(F.col(id_col).alias("_id"),
-                  shingle_hashes(F.col(text_col), shingle_k).alias("_hs")),
-        "_hs", num_perm=num_perm, seed=seed,
-    ).select("_id", "signature")
+    """(_id, band_id, band_hash[, sig]) rows of an (_id, signature) table:
+    the one banding projection every LSH pass shares (main pass, rescue,
+    the banding chooser, :func:`ops.dedup.lsh_band_rows`). ``carry_sig``
+    keeps the full signature as ``sig`` for the in-join screen of
+    :func:`ops.dedup.pairs_from_band_rows`. Map-only: one posexplode."""
+    sig = F.col("signature")
+    extra = [sig.alias("sig")] if carry_sig else []
+    return sig_df.select(
+        "_id",
+        F.posexplode(band_keys_col(sig, num_bands, width)).alias(
+            "band_id", "band_hash"
+        ),
+        *extra,
+    )
 
 
 def lsh_candidates(
     df: DataFrame,
+    sig_df: DataFrame,
     id_col: str = "url",
     text_col: str = "norm_text",
-    shingle_k: int = 5,
     num_perm: int = 64,
     num_bands: int = 16,
     bucket_cap: int = 200,
-    seed: int = 1,
     over_cap_window: int = 8,
     est_jaccard_floor: float = 0.0,
     cache_registry: list | None = None,
-    sig_df: DataFrame | None = None,
     n_docs: int | None = None,
     band_width: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Candidate id pairs from banded MinHash LSH.
+    """Candidate id pairs from banded MinHash LSH over ``sig_df``, the
+    (_id, signature) table of ``df`` (usually the re-read
+    ``s1_signatures`` checkpoint, :func:`ops.dedup.minhash_signatures`
+    at width ``num_perm``). ``df`` supplies only the text prefixes the
+    over-cap refinement sorts by.
 
     ``band_width`` (adaptive banding, :func:`choose_banding`): the number
     of leading signature positions banding consumes — ``num_bands`` bands
@@ -172,27 +127,9 @@ def lsh_candidates(
     admits background collisions on shingle-dense corpora; the screen
     keeps the expensive alignment stage's input volume bounded at a cost
     of num_perm longs per comparison instead of a full DP.
-
-    ``sig_df``: a precomputed (_id, signature) frame (usually the re-read
-    ``s1_signatures`` checkpoint from :func:`corpus_signatures`); when
-    given, the shingle+minhash pass is skipped and banding starts from
-    the scan. Signatures must have been built with the SAME shingle_k /
-    num_perm / seed — the orchestrator guarantees this by deriving both
-    from one config fingerprint.
     """
-    with_sig = (
-        sig_df.select("_id", "signature")
-        if sig_df is not None
-        else corpus_signatures(df, id_col, text_col, shingle_k, num_perm, seed)
-    )
-    bands = with_sig.select(
-        "_id",
-        F.posexplode(
-            band_keys_col(
-                F.col("signature"), num_bands, band_width or num_perm
-            )
-        ).alias("band_id", "band_hash"),
-    )
+    with_sig = sig_df.select("_id", "signature")
+    bands = band_rows(with_sig, num_bands, band_width or num_perm)
     # Bucket-size accounting; cap protects against degenerate buckets
     # (boilerplate pages) going quadratic.
     sizes = bands.groupBy("band_id", "band_hash").agg(F.count("*").alias("bsz"))
@@ -292,7 +229,7 @@ def _pair_est_jaccard(
     each pair, from ``with_sig``'s (_id, signature) columns.
 
     Estimates on 15-bit truncations of the minhash values, not the full
-    64-bit signatures: the estimator only compares positions for EQUALITY,
+    31-bit values: the estimator only compares positions for EQUALITY,
     and x==y implies trunc(x)==trunc(y), so recall through any downstream
     floor is exact; a false positional match needs a 2^-15 truncation
     collision (expected inflation ~num_perm/32768 of one position —
@@ -338,12 +275,8 @@ def _pair_est_jaccard(
                           F.col("ssig").alias("_sig2")), "id_2")
         .withColumn(
             "_est_j",
-            F.size(
-                F.filter(
-                    F.zip_with("_sig1", "_sig2", lambda x, y: x == y),
-                    lambda m: m,
-                )
-            ) / F.lit(float(num_perm)),
+            sig_eq_count(F.col("_sig1"), F.col("_sig2"))
+            / F.lit(float(num_perm)),
         )
         .select("id_1", "id_2", "_est_j")
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -354,19 +287,14 @@ def _pair_est_jaccard(
 
 
 def rescue_candidates(
-    df: DataFrame,
+    sig_df: DataFrame,
     probe_ids: DataFrame,
-    id_col: str = "url",
-    text_col: str = "norm_text",
-    shingle_k: int = 5,
     num_perm: int = 126,
     rows_per_band: int = 2,
     bucket_cap: int = 500,
-    seed: int = 1,
     est_jaccard_floor: float = 0.0,
     top_k: int = 500,
     cache_registry: list | None = None,
-    sig_df: DataFrame | None = None,
     n_docs: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Aggressive-banding LSH candidates for a SMALL probe set against the
@@ -382,9 +310,9 @@ def rescue_candidates(
     on EVERY record — the wrong trade at 10^12 rows.
 
     This pass instead re-banded only after clustering: the same ``num_perm``
-    permutations (same seed → bit-identical signatures to the main pass)
-    regrouped into ``num_perm // rows_per_band`` bands of ``rows_per_band``
-    rows. At r=2/63 bands the per-edge catch is ~0.9995 at Jaccard 0.34 and
+    signature positions as the main pass regrouped into
+    ``num_perm // rows_per_band`` bands of ``rows_per_band`` rows. At r=2/63
+    bands the per-edge catch is ~0.9995 at Jaccard 0.34 and
     ~1.0 at 0.42 — but only records in ``probe_ids`` (the post-clustering
     unclustered reps: misses plus true loners, ~30% of reps on the
     synthetic corpus) probe the buckets, so the candidate volume is
@@ -392,9 +320,8 @@ def rescue_candidates(
     cap-bounded constant, vs corpus-wide 2-row banding where EVERY record
     pays the collision mass. The corpus-side cost is one map-only banding
     projection over ``sig_df`` — the checkpointed ``s1_signatures`` table
-    the orchestrator passes in (:func:`corpus_signatures`), so the
-    shingle+minhash pass itself is NOT re-paid here; without ``sig_df``
-    the signatures are recomputed from text (same seed → bit-identical).
+    the orchestrator passes in — so the signature pass itself is NOT
+    re-paid here.
 
     Skew guards, in order:
     - buckets over ``bucket_cap`` are dropped AND counted (never silent);
@@ -420,17 +347,8 @@ def rescue_candidates(
     every pair touching >= 1 probe id; stats is a 1-row accounting frame.
     """
     num_bands = num_perm // rows_per_band
-    with_sig = (
-        sig_df.select("_id", "signature")
-        if sig_df is not None
-        else corpus_signatures(df, id_col, text_col, shingle_k, num_perm, seed)
-    )
-    bands = with_sig.select(
-        "_id",
-        F.posexplode(band_keys_col(F.col("signature"), num_bands, num_perm)).alias(
-            "band_id", "band_hash"
-        ),
-    )
+    with_sig = sig_df.select("_id", "signature")
+    bands = band_rows(with_sig, num_bands, num_perm)
     probes = probe_ids.select(F.col(probe_ids.columns[0]).alias("_id")).distinct()
     # One cheap action up front: |probe| decides the join strategy below
     # (broadcast only when the probe band rows verifiably fit — a
@@ -572,6 +490,11 @@ def _select_banding(
     (generic-shingle) buckets, a loss that GROWS with corpus size
     (29 over-cap buckets at 5k entities -> 8k at 400k).
     """
+    if max_perm < 1:
+        raise ValueError(
+            f"signature budget max_perm={max_perm} cannot hold one band "
+            "row; raise num_perm to at least 1"
+        )
     t_mass = sum(truth_hist.values())
 
     def _fallback(reason: str) -> BandingPlan:
@@ -582,7 +505,7 @@ def _select_banding(
         # plan must never promise more permutations than the signatures
         # carry.
         r, b = default
-        r = min(r, max_perm) if max_perm >= 1 else r
+        r = min(r, max_perm)
         b = max(1, min(b, max_perm // r))
         return BandingPlan(
             r, b, chosen_by=reason,
@@ -645,10 +568,12 @@ def _select_banding(
         )
     else:
         plan = _fallback("fallback-no-affordable-config")
-    assert plan.num_perm <= max_perm, (
-        f"banding plan {plan.rows_per_band}x{plan.num_bands} exceeds the "
-        f"signature budget max_perm={max_perm}"
-    )
+    if plan.num_perm > max_perm:
+        raise ValueError(
+            f"banding plan {plan.rows_per_band}x{plan.num_bands} exceeds "
+            f"the signature budget max_perm={max_perm}; raise num_perm to "
+            f"at least {plan.num_perm}"
+        )
     return plan
 
 
@@ -728,12 +653,7 @@ def choose_banding(
     )
 
     est_bands = num_perm // 2
-    bands = sigs.select(
-        "_id",
-        F.posexplode(
-            band_keys_col(F.col("signature"), est_bands, num_perm)
-        ).alias("band_id", "band_hash"),
-    )
+    bands = band_rows(sigs, est_bands, num_perm)
     probe_bands = bands.join(F.broadcast(probe), "_id", "left_semi")
     # Bucket sizes only for keys a probe actually touches: the aggregation
     # shuffles <= probe_cap * est_bands distinct keys, never the corpus's
@@ -850,12 +770,11 @@ def choose_banding(
     # refines) buckets over its cap, and truth pairs whose only
     # colliding bands land in such generic-shingle mega buckets are
     # lost — a loss that grows with corpus size. For each rows-per-band
-    # option, find the confirmed pairs' ACTUAL matching bands (exact
-    # slice equality on the signatures, no model), look up those
-    # buckets' corpus populations, and measure P(bucket <= production
-    # cap | band matches). Corpus cost: one band-explode per rows
-    # option, aggregated only over the <= |confirmed| x bands touched
-    # keys (broadcast semi-join).
+    # option, find the confirmed pairs' ACTUAL matching bands (equal band
+    # keys, no model), look up those buckets' corpus populations, and
+    # measure P(bucket <= production cap | band matches). Corpus cost:
+    # one band-explode per rows option, aggregated only over the
+    # <= |confirmed| x bands touched keys (broadcast semi-join).
     s_w = sigs.select(
         F.col("_id").alias("id_1"), F.col("signature").alias("_s1")
     )
@@ -869,28 +788,16 @@ def choose_banding(
     for r in rows_options:
         nb_r = num_perm // r
         match_bands = with_sigs.select(
-            F.explode(
-                F.filter(
-                    F.sequence(F.lit(0), F.lit(nb_r - 1)),
-                    lambda bi: F.xxhash64(
-                        bi, F.slice("_s1", bi * r + 1, r)
-                    ) == F.xxhash64(bi, F.slice("_s2", bi * r + 1, r)),
-                )
-            ).alias("band_id"),
-            F.col("_s1").alias("_sig"),
-        ).withColumn(
-            "band_hash",
-            F.xxhash64(
-                F.col("band_id"),
-                F.expr(f"slice(_sig, band_id * {r} + 1, {r})"),
-            ),
-        ).select("band_id", "band_hash")
-        keys_r = match_bands.distinct()
-        bands_r = sigs.select(
             F.posexplode(
-                band_keys_col(F.col("signature"), nb_r, nb_r * r)
+                F.zip_with(
+                    band_keys_col(F.col("_s1"), nb_r, nb_r * r),
+                    band_keys_col(F.col("_s2"), nb_r, nb_r * r),
+                    lambda k1, k2: F.when(k1 == k2, k1),
+                )
             ).alias("band_id", "band_hash")
-        )
+        ).where(F.col("band_hash").isNotNull())
+        keys_r = match_bands.distinct()
+        bands_r = band_rows(sigs, nb_r, nb_r * r)
         sizes_r = (
             bands_r.join(F.broadcast(keys_r), ["band_id", "band_hash"])
             .groupBy("band_id", "band_hash")
@@ -926,12 +833,8 @@ def choose_banding(
         .where(F.col("_id") != F.col("_aid"))
         .withColumn(
             "_est_j",
-            F.size(
-                F.filter(
-                    F.zip_with("signature", "_asig", lambda x, y: x == y),
-                    lambda m: m,
-                )
-            ) / F.lit(float(num_perm)),
+            sig_eq_count(F.col("signature"), F.col("_asig"))
+            / F.lit(float(num_perm)),
         )
     )
     bg_hist = {

@@ -107,16 +107,3 @@ def connected_components(
         .select("id", F.coalesce("component", "id").alias("component"))
     )
 
-
-def clusters_from_scores(
-    scored: DataFrame,
-    id_1: str = "id_1",
-    id_2: str = "id_2",
-    similarity_col: str = "similarity",
-    threshold: float = 0.8,
-) -> DataFrame:
-    """Threshold scored pairs into edges, run CC -> (id, component)."""
-    edges = scored.where(F.col(similarity_col) >= threshold).select(
-        F.col(id_1).alias("src"), F.col(id_2).alias("dst")
-    )
-    return connected_components(edges)

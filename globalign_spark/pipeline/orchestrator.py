@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import AlignParams, unit_cost_params
+from ..ops import dedup
 from . import blocking, clustering, metrics, normalize, scoring
 
 
@@ -150,7 +151,9 @@ class PipelineConfig:
             # code changes, so an old warehouse would otherwise resume with
             # mixed stage semantics and no error). v2: canonical-url
             # recrawl-dedup identity + canonical host in s0 (round 3).
-            "stage_semantics_version": 2,
+            # v3: s1 signatures and band keys from the md5 / 2^31-1
+            # MinHash family (ops.dedup.minhash_signatures).
+            "stage_semantics_version": 3,
         }
         return hashlib.sha256(
             json.dumps(payload, sort_keys=True).encode()
@@ -263,9 +266,8 @@ def run_pipeline(
     sig = (
         ck.write(
             "s1_signatures",
-            blocking.corpus_signatures(
-                norm, id_col="url", text_col="norm_text",
-                shingle_k=cfg.shingle_k, num_perm=cfg.num_perm,
+            dedup.minhash_signatures(
+                norm, "url", "norm_text", cfg.shingle_k, cfg.num_perm
             ),
         )
         if need_sig
@@ -294,16 +296,15 @@ def run_pipeline(
         s1_caches: list = []
         lsh_pairs, lsh_stats = blocking.lsh_candidates(
             norm,
+            sig,
             id_col="url",
             text_col="norm_text",
-            shingle_k=cfg.shingle_k,
             num_perm=cfg.num_perm,
             num_bands=num_bands,
             bucket_cap=cfg.bucket_cap,
             over_cap_window=cfg.over_cap_window,
             est_jaccard_floor=cfg.est_jaccard_floor,
             cache_registry=s1_caches,
-            sig_df=sig,
             n_docs=n_docs,
             band_width=band_width,
         )
@@ -374,18 +375,14 @@ def run_pipeline(
             )
             rescue_caches: list = []
             r_pairs, r_stats = blocking.rescue_candidates(
-                norm,
+                sig,
                 probe,
-                id_col="url",
-                text_col="norm_text",
-                shingle_k=cfg.shingle_k,
                 num_perm=cfg.num_perm,
                 rows_per_band=cfg.rescue_rows_per_band,
                 bucket_cap=cfg.rescue_bucket_cap,
                 est_jaccard_floor=cfg.est_jaccard_floor,
                 top_k=cfg.rescue_top_k,
                 cache_registry=rescue_caches,
-                sig_df=sig,
                 n_docs=n_docs,
             )
             # Pairs the main pass already scored must not be re-aligned.

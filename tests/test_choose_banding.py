@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pytest
 
+from globalign_spark.ops import dedup
 from globalign_spark.pipeline import blocking, normalize
 from globalign_spark.pipeline.blocking import (
     BandingPlan,
@@ -84,6 +85,14 @@ def test_select_fallback_clamps_to_narrow_budget():
     assert hard.num_perm <= 64
 
 
+def test_select_rejects_empty_budget():
+    """A budget below one permutation is a typed error naming the remedy
+    (it used to reach the fallback and trip a bare assert there)."""
+    for max_perm in (0, -3):
+        with pytest.raises(ValueError, match="raise num_perm"):
+            _select_banding({0.45: 100.0}, {0.15: 900.0}, 0.95, max_perm=max_perm)
+
+
 def test_select_widens_for_low_floor():
     easy = _select_banding({0.5: 100.0}, {0.15: 1000.0}, 0.95, max_perm=252)
     hard = _select_banding(
@@ -103,9 +112,7 @@ def test_plan_as_dict_roundtrip():
 def test_choose_banding_on_fixture_corpus(spark):
     pages = pages_df(spark, 400)
     norm = normalize.normalize_pages(pages)
-    sig = blocking.corpus_signatures(
-        norm, id_col="url", text_col="norm_text", shingle_k=5, num_perm=126
-    )
+    sig = dedup.minhash_signatures(norm, "url", "norm_text", 5, 126)
     plan = blocking.choose_banding(
         sig, 126, norm_df=norm, target_completeness=0.9, probe_cap=500
     )

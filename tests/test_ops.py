@@ -39,6 +39,44 @@ def test_minhash_lsh_finds_exact_and_near(docs):
     assert (0, 3) not in pairs      # unrelated text must not collide
 
 
+def _reference_signature(text, k, num_perm):
+    """hashlib spelling of the minhash_signatures formula: distinct
+    k-grams (one empty gram for text shorter than k), first 12 hex digits
+    of md5 mod p, then min over grams of (a_j*h + b_j) mod p."""
+    import hashlib
+
+    if text is None:
+        return None
+    p = dedup.MINHASH_P
+    grams = {text[i:i + k] for i in range(max(len(text) - k + 1, 1))}
+    hs = [int(hashlib.md5(g.encode()).hexdigest()[:12], 16) % p for g in grams]
+    return [min((a * h + b) % p for h in hs) for a, b in dedup.minhash_coefs(num_perm)]
+
+
+def test_minhash_signatures_match_hashlib_reference(spark):
+    """The one signature function is pinned to the formula the DuckDB
+    twins spell in SQL; NULL text gives a NULL signature and no band
+    rows, "" hashes its single empty gram."""
+    rows = [
+        (1, "the cat sat on the mat"),
+        (2, "naïve café — ünïcödé text"),
+        (3, "abc"),
+        (4, ""),
+        (5, None),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {
+        r["_id"]: r["signature"]
+        for r in dedup.minhash_signatures(df, num_perm=16).collect()
+    }
+    assert got == {i: _reference_signature(t, 5, 16) for i, t in rows}
+    assert got[5] is None
+    bands = dedup.lsh_band_rows(df, num_perm=16, num_bands=4)
+    assert sorted(bands.groupBy("_id").count().collect()) == [
+        (i, 4) for i in (1, 2, 3, 4)
+    ]
+
+
 def test_simhash_properties(docs):
     sh = {r.doc_id: r.simhash for r in dedup.add_simhash(docs).collect()}
     assert sh[0] == sh[1]  # identical text -> identical simhash

@@ -580,6 +580,7 @@ def test_lsh_signature_screen_counts_drops(spark):
     Jaccard BEFORE the alignment stage, and the drops are counted in stats
     (never silent). A prohibitive floor must empty the non-identical pairs;
     floor=0 must keep them and report n_screened_out = 0."""
+    from globalign_spark.ops import dedup
     from globalign_spark.pipeline import blocking
 
     base = "the quick brown fox jumps over the lazy dog and runs far away "
@@ -589,9 +590,10 @@ def test_lsh_signature_screen_counts_drops(spark):
         ("u3", base * 6 + "other ending"),  # near-identical to u1/u2
     ]
     df = spark.createDataFrame(rows, ["url", "norm_text"])
+    sig = dedup.minhash_signatures(df, "url", "norm_text", 5, 64)
 
     open_pairs, open_stats = blocking.lsh_candidates(
-        df, bucket_cap=50, est_jaccard_floor=0.0
+        df, sig, bucket_cap=50, est_jaccard_floor=0.0
     )
     n_open = open_pairs.count()
     assert n_open >= 1
@@ -599,7 +601,7 @@ def test_lsh_signature_screen_counts_drops(spark):
     assert srow["n_screened_out"] == 0, srow
 
     shut_pairs, shut_stats = blocking.lsh_candidates(
-        df, bucket_cap=50, est_jaccard_floor=1.1
+        df, sig, bucket_cap=50, est_jaccard_floor=1.1
     )
     assert shut_pairs.count() == 0
     srow = shut_stats.collect()[0].asDict()
@@ -607,7 +609,7 @@ def test_lsh_signature_screen_counts_drops(spark):
 
     # a permissive floor keeps the near-identical pairs (est_j ~ 0.9+)
     keep_pairs, _ = blocking.lsh_candidates(
-        df, bucket_cap=50, est_jaccard_floor=0.5
+        df, sig, bucket_cap=50, est_jaccard_floor=0.5
     )
     assert keep_pairs.count() == n_open
 
@@ -666,39 +668,40 @@ def test_singleton_rescue_recovers_missed_edges(spark, tmp_path):
 
 def test_shared_signature_table_parity(spark, tmp_path):
     """The checkpointed s1_signatures table feeds both banding schemes:
-    lsh_candidates and rescue_candidates given a precomputed (_id,
-    signature) frame must produce exactly the pairs they produce when
-    recomputing signatures from text (same seed => bit-identical), and a
-    fresh pipeline run must write the s1_signatures checkpoint once."""
+    lsh_candidates and rescue_candidates reading a parquet scan of the
+    signature table must produce exactly the pairs they produce from its
+    lineage, and a fresh pipeline run writes s1_signatures once and bands
+    it exactly as lsh_band_rows (streaming, incremental, the oracle
+    queries) bands the same docs at the chosen width."""
+    from globalign_spark.ops import dedup
     from globalign_spark.pipeline import blocking
+    from globalign_spark.pipeline.orchestrator import Checkpointer
 
     pages = pages_df(spark, n_entities=80, seed=7)
     docs = pages.select(
         "url", extract_text(F.col("html")).alias("norm_text")
     )
-    sig = blocking.corpus_signatures(docs, num_perm=42)
+    sig = dedup.minhash_signatures(docs, "url", "norm_text", 5, 42)
     # Round-trip through parquet: production reads a scan, not lineage.
     p = str(tmp_path / "sigs")
     sig.write.parquet(p)
-    sig = spark.read.parquet(p)
+    scan = spark.read.parquet(p)
 
-    from_text, _ = blocking.lsh_candidates(
-        docs, num_perm=42, num_bands=14, est_jaccard_floor=0.25
+    from_lineage, _ = blocking.lsh_candidates(
+        docs, sig, num_perm=42, num_bands=14, est_jaccard_floor=0.25
     )
-    from_sig, _ = blocking.lsh_candidates(
-        docs, num_perm=42, num_bands=14, est_jaccard_floor=0.25,
-        sig_df=sig,
+    from_scan, _ = blocking.lsh_candidates(
+        docs, scan, num_perm=42, num_bands=14, est_jaccard_floor=0.25
     )
-    assert sorted(map(tuple, from_text.collect())) == sorted(
-        map(tuple, from_sig.collect())
+    assert sorted(map(tuple, from_lineage.collect())) == sorted(
+        map(tuple, from_scan.collect())
     )
 
     probe = docs.select("url").limit(15)
-    r_text, _ = blocking.rescue_candidates(docs, probe, num_perm=42)
-    r_sig, _ = blocking.rescue_candidates(docs, probe, num_perm=42,
-                                          sig_df=sig)
-    assert sorted(map(tuple, r_text.collect())) == sorted(
-        map(tuple, r_sig.collect())
+    r_lineage, _ = blocking.rescue_candidates(sig, probe, num_perm=42)
+    r_scan, _ = blocking.rescue_candidates(scan, probe, num_perm=42)
+    assert sorted(map(tuple, r_lineage.collect())) == sorted(
+        map(tuple, r_scan.collect())
     )
 
     cfg = PipelineConfig(warehouse=str(tmp_path / "wh"))
@@ -708,6 +711,22 @@ def test_shared_signature_table_parity(spark, tmp_path):
     assert "s1_signatures" in out["stages"]
     assert out["stages"]["s1_signatures"]["rows"] > 0
 
+    ck = Checkpointer(spark, cfg.warehouse)
+    plan = out["stages"]["s1_candidates"]["banding_plan"]
+    reps = ck.read("s0_normalized").join(
+        ck.read("s0b_rep_map").where(F.col("url") == F.col("rep_url")),
+        "url", "left_semi",
+    )
+    pipeline_bands = blocking.band_rows(
+        ck.read("s1_signatures"), plan["num_bands"], plan["num_perm"]
+    )
+    standalone = dedup.lsh_band_rows(
+        reps, "url", "norm_text", cfg.shingle_k, cfg.num_perm,
+        plan["num_bands"], band_perm=plan["num_perm"],
+    )
+    got = sorted(map(tuple, standalone.collect()))
+    assert got and got == sorted(map(tuple, pipeline_bands.collect()))
+
 
 def test_rescue_top_k_keeps_best_partners(spark):
     """top_k ranks a probe's partners by signature-estimated Jaccard and
@@ -716,6 +735,7 @@ def test_rescue_top_k_keeps_best_partners(spark):
     bucket cohabitant). top_k=1 must keep, for every probe that has any
     partner, exactly its top-estimated pair, and that pair set must be a
     subset of the uncapped run's."""
+    from globalign_spark.ops import dedup
     from globalign_spark.pipeline import blocking
 
     pages = pages_df(spark, n_entities=60, seed=11)
@@ -723,12 +743,9 @@ def test_rescue_top_k_keeps_best_partners(spark):
         "url", extract_text(F.col("html")).alias("norm_text")
     )
     probe = docs.select("url").limit(12)
-    uncapped, _ = blocking.rescue_candidates(
-        docs, probe, num_perm=42, top_k=0
-    )
-    top1, _ = blocking.rescue_candidates(
-        docs, probe, num_perm=42, top_k=1
-    )
+    sig = dedup.minhash_signatures(docs, "url", "norm_text", 5, 42)
+    uncapped, _ = blocking.rescue_candidates(sig, probe, num_perm=42, top_k=0)
+    top1, _ = blocking.rescue_candidates(sig, probe, num_perm=42, top_k=1)
     un = set(map(tuple, uncapped.collect()))
     t1 = set(map(tuple, top1.collect()))
     assert t1 <= un

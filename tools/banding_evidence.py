@@ -33,6 +33,7 @@ sys.path.insert(0, str(REPO))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from globalign_spark.ops import dedup  # noqa: E402
 from globalign_spark.pipeline import blocking, metrics, normalize  # noqa: E402
 from globalign_spark.session import get_spark  # noqa: E402
 from globalign_spark.sources.fixtures import labeled_pairs_df, pages_df  # noqa: E402
@@ -46,10 +47,7 @@ def run_arm(spark, norm, truth, n_docs, *, num_perm, num_bands=None,
             band_width=None, auto=False, workdir=None) -> dict:
     out: dict = {"num_perm": num_perm}
     t0 = time.time()
-    sig = blocking.corpus_signatures(
-        norm, id_col="url", text_col="norm_text", shingle_k=5,
-        num_perm=num_perm,
-    )
+    sig = dedup.minhash_signatures(norm, "url", "norm_text", 5, num_perm)
     # materialize signatures once (both the plan probe and the banding
     # read them; mirrors the orchestrator's s1_signatures checkpoint)
     sig_path = f"{workdir}/sig_{num_perm}"
@@ -71,11 +69,10 @@ def run_arm(spark, norm, truth, n_docs, *, num_perm, num_bands=None,
     t0 = time.time()
     caches: list = []
     lsh_pairs, lsh_stats = blocking.lsh_candidates(
-        norm, id_col="url", text_col="norm_text", shingle_k=5,
+        norm, sig, id_col="url", text_col="norm_text",
         num_perm=num_perm, num_bands=num_bands, bucket_cap=200,
         over_cap_window=8, est_jaccard_floor=0.25,
-        cache_registry=caches, sig_df=sig, n_docs=n_docs,
-        band_width=band_width,
+        cache_registry=caches, n_docs=n_docs, band_width=band_width,
     )
     sn = blocking.sorted_neighborhood_candidates(
         norm, id_col="url", key_col="host", order_col="norm_text", window=6
