@@ -140,7 +140,11 @@ def embed_corpus(
     return df.select(
         F.col(id_col).alias(id_col),
         embed_text(F.col(text_col), dim=dim, n=n).alias(out_col),
-        F.size(toks).cast("long").alias("n_tokens"),
+        # NULL text -> NULL n_tokens whatever spark.sql.legacy.sizeOfNull
+        # says (F.size alone gives -1 under the legacy setting), as on
+        # the arrow path.
+        F.when(F.col(text_col).isNull(), None)
+        .otherwise(F.size(toks)).cast("long").alias("n_tokens"),
         *[F.col(c) for c in keep_cols],
     )
 

@@ -42,6 +42,10 @@ from ..ops.dedup import sig_eq_count
 # cap, comfortably inside executor memory; beyond it the screen joins stay
 # shuffle-based.
 _SIG_BROADCAST_MAX_DOCS = 2_000_000
+# Rows per partition of the banding chooser's probe-pair distinct: its
+# default-config bound, probe_cap * (num_perm / 2) * bucket_cap = 63M
+# rows, maps to ~256 partitions; a small corpus gets one.
+_DISTINCT_ROWS_PER_PART = 250_000
 
 
 def band_keys_col(signature, num_bands: int, width: int):
@@ -640,49 +644,82 @@ def choose_banding(
     rediscovers 42x3 from the 50k-entity corpus rather than defaulting
     to the widest/most collision-heavy scheme).
 
-    Cost at corpus scale: one banding projection + explode over the
-    signature table (the same map-only shape as a rescue pass), a
-    bucket-size aggregation keyed by (band, hash), and two bounded
-    collects (<= ``truth_collect_cap`` + probe_cap * bg_anchors floats).
+    Cost at corpus scale: one bounded top-k collect of the probe ids
+    (the anchors are its head), two corpus band explodes — one over every
+    rows-per-band width at once, aggregated only over the keys a probe
+    touches into the shared bucket-size table, and the 2-row collision
+    join — and three small collects: the collision volume (which sizes
+    the pair distinct), the truth and background histograms (<= 2 x 101
+    bin counts) and one cap-survival row per rows option.
     """
-    sigs = sig_df.select("_id", "signature")
-    rank = F.xxhash64(F.col("_id"))
-    probe = (
-        sigs.select("_id").orderBy(rank.asc(), F.col("_id"))
-        .limit(probe_cap)
+    if norm_df is None:
+        raise ValueError(
+            "choose_banding needs norm_df (id, text) to alignment-confirm "
+            "the probe pairs"
+        )
+    # A document without text has no bands and no estimate: never a probe.
+    sigs = sig_df.select("_id", "signature").where(
+        F.col("signature").isNotNull()
     )
+    spark = sigs.sparkSession
+    # Collected once; pandas in, so the probe frame is a local relation
+    # that broadcasts without a job.
+    probe_pd = (
+        sigs.select("_id")
+        .orderBy(F.xxhash64(F.col("_id")).asc(), F.col("_id"))
+        .limit(probe_cap).toPandas()
+    )
+    id_schema = sigs.select("_id").schema
+    probe = spark.createDataFrame(probe_pd, id_schema)
+    probe_sigs = sigs.join(F.broadcast(probe), "_id", "left_semi")
 
-    est_bands = num_perm // 2
-    bands = band_rows(sigs, est_bands, num_perm)
-    probe_bands = bands.join(F.broadcast(probe), "_id", "left_semi")
-    # Bucket sizes only for keys a probe actually touches: the aggregation
-    # shuffles <= probe_cap * est_bands distinct keys, never the corpus's
-    # full bucket keyspace.
-    probe_keys = probe_bands.select("band_id", "band_hash").distinct()
+    # Every width the chooser reads (the 2-row collision pass first, then
+    # each rows option for cap survival) in one band-key array: a key's
+    # array position identifies its (width, band), and the 2-row bands
+    # keep their own band ids.
+    widths = [2, *sorted(set(rows_options) - {2})]
+    ends = np.cumsum([num_perm // r for r in widths]).tolist()
+    bounds = dict(zip(widths, zip([0, *ends], ends)))
+
+    def all_widths(sig):
+        return F.concat(*[
+            band_keys_col(sig, num_perm // r, num_perm // r * r)
+            for r in widths
+        ])
+
+    # One bucket-size table for all of them, over the keys a probe
+    # touches only, so it stays small enough to persist and broadcast.
+    key = ["band_id", "band_hash"]
+    exploded = F.posexplode(all_widths(F.col("signature"))).alias(*key)
     sizes = (
-        bands.join(F.broadcast(probe_keys), ["band_id", "band_hash"])
-        .groupBy("band_id", "band_hash")
+        sigs.select(exploded)
+        .join(F.broadcast(probe_sigs.select(exploded)), key, "left_semi")
+        .groupBy(*key)
         .agg(F.count("*").alias("bsz"))
+        .persist()
     )
-    ok_keys = sizes.where(F.col("bsz") <= bucket_cap).drop("bsz")
-    # The probe-collision volume is bounded by probe_cap * est_bands *
-    # bucket_cap, but its distinct's hash maps carry two url strings per
-    # entry — at 1M docs the session-default partition count left ~500 MB
-    # of aggregation state per concurrent task and exhausted the unified
-    # pool (measured UNABLE_TO_ACQUIRE at 526k entities). Partition the
-    # distinct wide enough that per-task state stays tens of MB
-    # regardless of the session default.
-    dedup_parts = max(
-        sigs.sparkSession.sparkContext.defaultParallelism * 32, 256
+    est_bands = num_perm // 2
+    probe_side = (
+        band_rows(probe_sigs, est_bands, 2 * est_bands)
+        .join(F.broadcast(sizes.where(
+            (F.col("band_id") < est_bands) & (F.col("bsz") <= bucket_cap)
+        )), key)
+        .select("band_id", "band_hash", F.col("_id").alias("id_1"), "bsz")
     )
+    # The distinct's hash maps carry two url strings per entry; at 1M docs
+    # a too-narrow distinct left ~500 MB of aggregation state per task and
+    # exhausted the unified pool (measured UNABLE_TO_ACQUIRE at 526k
+    # entities). Its exact input row count (the probes' under-cap bucket
+    # sizes) sets its partition count.
+    n_rows = probe_side.agg(F.sum("bsz")).first()[0] or 0
     raw = (
-        bands.join(F.broadcast(
-            probe_bands.join(ok_keys, ["band_id", "band_hash"])
-            .select("band_id", "band_hash", F.col("_id").alias("id_1"))
-        ), ["band_id", "band_hash"])
+        band_rows(sigs, est_bands, 2 * est_bands)
+        .join(F.broadcast(probe_side.drop("bsz")), key)
         .where(F.col("_id") != F.col("id_1"))
         .select("id_1", F.col("_id").alias("id_2"))
-        .repartition(dedup_parts, "id_1", "id_2")
+        .repartition(
+            max(1, -(-n_rows // _DISTINCT_ROWS_PER_PART)), "id_1", "id_2"
+        )
         .distinct()
     )
     # A truth pair whose BOTH members are probes survives the distinct
@@ -715,11 +752,6 @@ def choose_banding(
             .where(F.col("_rk") <= align_top_k)
             .drop("_rk")
         )
-    if norm_df is None:
-        raise ValueError(
-            "choose_banding needs norm_df (id, text) to alignment-confirm "
-            "the probe pairs"
-        )
     from ..config import unit_cost_params
     from .scoring import score_pairs, with_similarity
 
@@ -735,7 +767,7 @@ def choose_banding(
             "id_2",
         )
         .repartition(
-            sigs.sparkSession.sparkContext.defaultParallelism * 2,
+            spark.sparkContext.defaultParallelism * 2,
             F.xxhash64("id_1", "id_2"),
         )
     )
@@ -756,12 +788,25 @@ def choose_banding(
         (~F.col("oversize"))
         & (F.col("similarity") >= confirm_threshold)
     ).select("id_1", "id_2", "_est_j").persist()
-    truth_hist = {
-        float(r["b"]): float(r["count"])
-        for r in confirmed.groupBy(
-            F.round("_est_j", 2).alias("b")
-        ).count().collect()
-    }
+    anchors = probe_sigs.join(F.broadcast(
+        spark.createDataFrame(probe_pd.head(bg_anchors), id_schema)
+    ), "_id", "left_semi").select(
+        F.col("_id").alias("_aid"), F.col("signature").alias("_asig")
+    )
+    bg_est = (
+        probe_sigs.crossJoin(F.broadcast(anchors))
+        .where(F.col("_id") != F.col("_aid"))
+        .select(F.lit(False), sig_eq_count(F.col("signature"), F.col("_asig"))
+                / F.lit(float(num_perm)))
+    )
+    # Truth and background histograms in one action.
+    hists: dict = {True: {}, False: {}}
+    for r in sorted(
+        confirmed.select(F.lit(True).alias("truth"), "_est_j").union(bg_est)
+        .groupBy("truth", F.round("_est_j", 2).alias("b")).count().collect()
+    ):
+        hists[r["truth"]][float(r["b"])] = float(r["count"])
+    truth_hist, bg_hist = hists[True], hists[False]
     for frame in caches:
         frame.unpersist()
 
@@ -771,79 +816,35 @@ def choose_banding(
     # colliding bands land in such generic-shingle mega buckets are
     # lost — a loss that grows with corpus size. For each rows-per-band
     # option, find the confirmed pairs' ACTUAL matching bands (equal band
-    # keys, no model), look up those buckets' corpus populations, and
-    # measure P(bucket <= production cap | band matches). Corpus cost:
-    # one band-explode per rows option, aggregated only over the
-    # <= |confirmed| x bands touched keys (broadcast semi-join).
-    s_w = sigs.select(
-        F.col("_id").alias("id_1"), F.col("signature").alias("_s1")
+    # keys, no model) and measure P(bucket <= production cap | band
+    # matches). A matching key is its probe's key, so the size table
+    # holds it: one small join, no corpus pass.
+    matched = (
+        confirmed
+        .join(sigs.select(F.col("_id").alias("id_1"),
+                          F.col("signature").alias("_s1")), "id_1")
+        .join(sigs.select(F.col("_id").alias("id_2"),
+                          F.col("signature").alias("_s2")), "id_2")
+        .select(F.posexplode(F.zip_with(
+            all_widths(F.col("_s1")), all_widths(F.col("_s2")),
+            lambda k1, k2: F.when(k1 == k2, k1),
+        )).alias(*key))
+        .where(F.col("band_hash").isNotNull())
+        .join(F.broadcast(sizes), key)
+        .groupBy("band_id")
+        .agg(F.count("*").alias("n"),
+             F.count(F.when(F.col("bsz") <= prod_bucket_cap, 1)).alias("ok"))
+        .collect()
     )
-    s_w2 = sigs.select(
-        F.col("_id").alias("id_2"), F.col("signature").alias("_s2")
-    )
-    with_sigs = (
-        confirmed.join(s_w, "id_1").join(s_w2, "id_2").persist()
-    )
-    cap_survival: dict[int, float] = {}
+    cap_survival = {}
     for r in rows_options:
-        nb_r = num_perm // r
-        match_bands = with_sigs.select(
-            F.posexplode(
-                F.zip_with(
-                    band_keys_col(F.col("_s1"), nb_r, nb_r * r),
-                    band_keys_col(F.col("_s2"), nb_r, nb_r * r),
-                    lambda k1, k2: F.when(k1 == k2, k1),
-                )
-            ).alias("band_id", "band_hash")
-        ).where(F.col("band_hash").isNotNull())
-        keys_r = match_bands.distinct()
-        bands_r = band_rows(sigs, nb_r, nb_r * r)
-        sizes_r = (
-            bands_r.join(F.broadcast(keys_r), ["band_id", "band_hash"])
-            .groupBy("band_id", "band_hash")
-            .agg(F.count("*").alias("bsz"))
-        )
-        row = (
-            match_bands.join(
-                F.broadcast(sizes_r), ["band_id", "band_hash"]
-            )
-            .agg(
-                F.count("*").alias("n"),
-                F.sum(
-                    F.when(
-                        F.col("bsz") <= prod_bucket_cap, 1
-                    ).otherwise(0)
-                ).alias("ok"),
-            )
-            .first()
-        )
-        cap_survival[r] = (
-            row["ok"] / row["n"] if row and row["n"] else 1.0
-        )
+        lo, hi = bounds[r]
+        rows = [row for row in matched if lo <= row["band_id"] < hi]
+        n = sum(row["n"] for row in rows)
+        cap_survival[r] = sum(row["ok"] for row in rows) / n if n else 1.0
 
-    anchors = (
-        sigs.join(F.broadcast(probe), "_id", "left_semi")
-        .orderBy(F.xxhash64(F.col("_id")).asc(), F.col("_id"))
-        .limit(bg_anchors)
-        .select(F.col("_id").alias("_aid"), F.col("signature").alias("_asig"))
-    )
-    bg_pairs = (
-        sigs.join(F.broadcast(probe), "_id", "left_semi")
-        .crossJoin(F.broadcast(anchors))
-        .where(F.col("_id") != F.col("_aid"))
-        .withColumn(
-            "_est_j",
-            sig_eq_count(F.col("signature"), F.col("_asig"))
-            / F.lit(float(num_perm)),
-        )
-    )
-    bg_hist = {
-        float(r["b"]): float(r["count"])
-        for r in bg_pairs.groupBy(F.round("_est_j", 2).alias("b"))
-        .count().collect()
-    }
     confirmed.unpersist()
-    with_sigs.unpersist()
+    sizes.unpersist()
     return _select_banding(
         truth_hist, bg_hist, target_completeness, num_perm,
         rows_options=rows_options, bg_cap=bg_cap,

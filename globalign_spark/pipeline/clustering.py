@@ -13,12 +13,13 @@ Each round:
       emit (v, m) for v in N≤(u) and (u, m).
 
 Driver loop with per-iteration localCheckpoint (cuts lineage; reference has
-no iterative operators at all — SURVEY.md §2.4 J5 is new design).
+no iterative operators at all — SURVEY.md §2.4 J5 is new design); the
+convergence test rides on that checkpoint's own job.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -55,15 +56,6 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def _fingerprint(edges: DataFrame):
-    row = edges.agg(
-        F.count("*").alias("n"),
-        # bit_xor: order-insensitive set fingerprint, no ANSI overflow.
-        F.bit_xor(F.xxhash64("src", "dst")).alias("h"),
-    ).collect()[0]
-    return row.n, row.h
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -74,36 +66,48 @@ def connected_components(
     appears in an edge; component = min node id of its component. Node ids
     may be any orderable type (urls as strings work; hashing to int64 is an
     optimization left to the caller at the 10^12 scale).
+
+    Actions: one localCheckpoint of the input, then one per round, whose
+    job also yields the round's convergence fingerprint (``observe``).
+    Raises ``RuntimeError`` if the fixpoint is not reached in
+    ``max_iter`` rounds.
     """
-    # Materialize the edge list ONCE up front: everything below (node set
-    # and the iteration) derives from this checkpoint, never from the raw
-    # upstream plan (which may be an expensive scoring pipeline that must
-    # not be recomputed).
+    # Materialize the edge list ONCE up front: the iteration derives from
+    # this checkpoint, never from the raw upstream plan (which may be an
+    # expensive scoring pipeline that must not be recomputed).
     cur = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .where(F.col("src") != F.col("dst"))
         .distinct()
         .localCheckpoint()
     )
-    all_nodes = (
-        cur.select(F.col("src").alias("id"))
-        .union(cur.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint()
-    )
     prev_fp = None
     for _ in range(max_iter):
-        cur = _small_star(_large_star(cur)).localCheckpoint()
-        fp = _fingerprint(cur)
+        obs = Observation()
+        cur = (
+            _small_star(_large_star(cur))
+            .observe(
+                obs,
+                F.count("*").alias("n"),
+                # order-insensitive set fingerprint, no ANSI overflow
+                F.bit_xor(F.xxhash64("src", "dst")).alias("h"),
+            )
+            .localCheckpoint()
+        )
+        fp = obs.get
         if fp == prev_fp:
             break
         prev_fp = fp
-    # At fixpoint edges form stars rooted at component minima.
-    roots = cur.groupBy("src").agg(F.min("dst").alias("component")).select(
-        F.col("src").alias("id"), F.least("component", "src").alias("component")
-    )
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in max_iter={max_iter} "
+            "rounds; raise max_iter"
+        )
+    # At fixpoint edges form stars rooted at component minima, and star
+    # contraction keeps every non-isolated node on some edge (Kiveris et
+    # al.): a root appears only as dst and labels itself.
     return (
-        all_nodes.join(roots, "id", "left")
-        .select("id", F.coalesce("component", "id").alias("component"))
+        cur.union(cur.select("dst", "dst"))
+        .groupBy(F.col("src").alias("id"))
+        .agg(F.min("dst").alias("component"))
     )
-

@@ -1,4 +1,4 @@
-"""Stage 6 — evaluation joins and per-stage lineage/metrics (SURVEY §2.4 J4).
+"""Stage 6 — evaluation joins and metrics (SURVEY §2.4 J4).
 
 Pairwise precision/recall/F1 of predicted clusters against labeled pairs,
 computed with semi/anti joins (never collects pair sets to the driver).
@@ -176,19 +176,4 @@ def cluster_purity(assign: DataFrame, truth) -> DataFrame:
         F.round(F.col("majority_overlap") / F.col("n_members"), 6).alias(
             "purity"
         ),
-    )
-
-
-def stage_lineage(df: DataFrame, stage: str) -> DataFrame:
-    """Per-partition lineage rows for a stage output: (stage, partition_id,
-    n_rows) — appended to the run's lineage table by the orchestrator."""
-    return (
-        df.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid")
-        .agg(F.count("*").alias("n_rows"))
-        .select(
-            F.lit(stage).alias("stage"),
-            F.col("_pid").alias("partition_id"),
-            "n_rows",
-        )
     )

@@ -2,7 +2,7 @@
 
 Each stage writes its output as a parquet "checkpoint table" under the run's
 warehouse directory together with a ``_MANIFEST.json`` (stage name, row
-count, input fingerprints, per-partition lineage). A re-run skips every
+count, input fingerprints, per-file row counts). A re-run skips every
 stage whose manifest is present and consistent — a killed run resumes at the
 last completed stage (north_rule). The table abstraction is format-agnostic:
 with an Iceberg catalog configured these become ``writeTo(...)`` appends with
@@ -28,6 +28,7 @@ import time
 from dataclasses import dataclass, field
 from pathlib import Path
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -202,9 +203,12 @@ class Checkpointer:
         path = self.root / name
         t0 = time.time()
         df.write.mode("overwrite").parquet(str(path / "data"))
-        out = self.read(name)
+        # Re-read with the written schema (no schema-inference job) and
+        # count rows from the parquet footers (no Spark action).
+        out = self.spark.read.schema(df.schema).parquet(str(path / "data"))
         lineage = [
-            r.asDict() for r in metrics.stage_lineage(out, name).collect()
+            {"file": f.name, "n_rows": pq.ParquetFile(f).metadata.num_rows}
+            for f in sorted((path / "data").glob("*.parquet"))
         ]
         manifest = {
             "stage": name,
@@ -364,15 +368,14 @@ def run_pipeline(
             # in. (A rep whose exact-dup group has >= 2 members but no
             # fuzzy edge is still a probe: its group may belong to a
             # larger fuzzy cluster whose only linking edge was missed.)
-            # CC is cheap relative to scoring (O(E) per iteration, ~1 s at
-            # 100k pages) and runs again after the rescue edges land; on
-            # resume this pre-rescue pass is skipped entirely.
-            pre_comps = clustering.connected_components(
-                edges, src="id_1", dst="id_2"
-            )
-            probe = norm.select("url").join(
-                pre_comps.select(F.col("id").alias("url")), "url", "left_anti"
-            )
+            # Two anti-joins against the edge endpoints: the node set of
+            # the pre-rescue components, without running them.
+            linked = edges.where(F.col("id_1") != F.col("id_2"))
+            probe = norm.select("url")
+            for end in ("id_1", "id_2"):
+                probe = probe.join(
+                    linked.select(F.col(end).alias("url")), "url", "left_anti"
+                )
             rescue_caches: list = []
             r_pairs, r_stats = blocking.rescue_candidates(
                 sig,

@@ -123,3 +123,28 @@ def test_choose_banding_on_fixture_corpus(spark):
     assert plan.num_perm <= 126
     assert d["truth_mass"] > 30
     assert 0 < d["predicted_completeness"] <= 1.0
+    # The plan and all of its evidence are pinned: changing how the
+    # estimator is planned or executed must not move any of them.
+    assert d == {
+        "rows_per_band": 3, "num_bands": 28, "num_perm": 84,
+        "chosen_by": "target-met-min-bg",
+        "predicted_completeness": 0.9004, "predicted_bg_rate": 0.0599,
+        "truth_mass": 600.0, "bg_mass": 31936.0, "est_floor": 0.25,
+        "target_completeness": 0.9, "bg_cap": 0.4, "max_perm": 126,
+        "cap_survival": {2: 0.9792, 3: 1.0, 4: 1.0},
+    }
+
+
+def test_choose_banding_skips_documents_without_text(spark):
+    """A NULL-text document (NULL signature) among the probes must not
+    break the estimator: it has no bands and no Jaccard estimate."""
+    norm = spark.createDataFrame(
+        [("u1", "the quick brown fox jumps over the lazy dog"),
+         ("u2", "the quick brown fox jumps over the lazy cat"),
+         ("u3", None)],
+        "url string, norm_text string",
+    )
+    sig = dedup.minhash_signatures(norm, "url", "norm_text", 5, 126)
+    d = blocking.choose_banding(sig, 126, norm_df=norm).as_dict()
+    assert d["chosen_by"] == "fallback-insufficient-truth-mass"
+    assert d["bg_mass"] == 2.0

@@ -279,3 +279,28 @@ def test_embedding_near_dup_block_cap(spark):
     assert stats.n_blocks == 2
     assert stats.n_blocks_dropped == 1
     assert stats.n_vecs_in_dropped == 5
+
+
+def test_n_tokens_null_text_independent_of_size_of_null(spark):
+    """NULL text gives NULL n_tokens on both impls even under the legacy
+    sizeOfNull setting (where F.size of a NULL array is -1; the legacy
+    flag only takes effect with ANSI mode off)."""
+    d = spark.createDataFrame(
+        [(1, "two tokens"), (2, None)], "doc_id long, text string"
+    )
+    saved = {
+        k: spark.conf.get(k)
+        for k in ("spark.sql.legacy.sizeOfNull", "spark.sql.ansi.enabled")
+    }
+    spark.conf.set("spark.sql.legacy.sizeOfNull", "true")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        for impl in ("expr", "arrow"):
+            got = {
+                r.doc_id: r.n_tokens
+                for r in E.embed_corpus(d, dim=16, impl=impl).collect()
+            }
+            assert got == {1: 2, 2: None}, impl
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)

@@ -54,6 +54,9 @@ def test_cc_chain_and_strings(spark):
     got = {r.id: r.component for r in connected_components(df).collect()}
     assert all(v == "n0000" for v in got.values())
     assert len(got) == 100
+    # one round cannot reach the fixpoint of a 100-node chain: no labels
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        connected_components(df, max_iter=1)
 
 
 def test_extractor_byte_identity(spark):
@@ -116,9 +119,45 @@ def test_pipeline_resume_skips_stages(spark, pipeline_result):
     }
     assert before == after  # nothing recomputed
     assert summary2["stages"] == summary["stages"]
-    # manifests carry per-partition lineage
-    m = json.loads((Path(wh) / "s3_scores" / "_MANIFEST.json").read_text())
-    assert m["rows"] == sum(r["n_rows"] for r in m["lineage"])
+    # manifests carry per-file lineage read from the parquet footers,
+    # and their row counts are the stages' row counts
+    for stage in after:
+        m = json.loads((Path(wh) / stage / "_MANIFEST.json").read_text())
+        assert m["rows"] == sum(r["n_rows"] for r in m["lineage"])
+        assert m["partitions"] == len(m["lineage"])
+        assert m["rows"] == spark.read.parquet(
+            str(Path(wh) / stage / "data")
+        ).count(), stage
+
+
+def _probes_expected(spark, wh):
+    """(reps - distinct s4 endpoints, distinct s4 endpoints), both counted
+    from a warehouse's checkpoints."""
+    reps = spark.read.parquet(str(wh / "s0b_rep_map" / "data")).where(
+        F.col("url") == F.col("rep_url")
+    )
+    s4 = spark.read.parquet(str(wh / "s4_edges" / "data")).where(
+        F.col("id_1") != F.col("id_2")
+    )
+    n_ends = (
+        s4.select(F.col("id_1").alias("u"))
+        .union(s4.select(F.col("id_2").alias("u")))
+        .distinct()
+        .count()
+    )
+    return reps.count() - n_ends, n_ends
+
+
+def test_rescue_probes_are_reps_without_edges(spark, pipeline_result):
+    """The rescue pass probes exactly the reps that are not an endpoint of
+    any main-pass edge."""
+    from pathlib import Path
+
+    summary, wh, _ = pipeline_result
+    rstats = summary["stages"]["s4b_rescue_edges"]["rescue_bucket_stats"]
+    want, n_ends = _probes_expected(spark, Path(wh))
+    assert n_ends > 0
+    assert rstats["n_probes"] == want, rstats
 
 
 def test_pipeline_precision_recall_breakdown(pipeline_result):
@@ -659,6 +698,10 @@ def test_singleton_rescue_recovers_missed_edges(spark, tmp_path):
     assert rstats["n_probe_collisions"] > 0, rstats
     assert rstats["n_screened_out"] >= 0, rstats
     assert on["stages"]["s4b_rescue_edges"]["rows"] > 0
+    # The main pass found no fuzzy edge, so every rep probes.
+    assert _probes_expected(spark, tmp_path / "wh_on") == (
+        rstats["n_probes"], 0
+    )
 
     # Resume: a second run against the same warehouse reuses the rescue
     # checkpoint (manifest fingerprint must match the new config hash).

@@ -15,6 +15,7 @@ import sys
 from pathlib import Path
 
 import duckdb
+import numpy as np
 import pandas as pd
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -40,10 +41,11 @@ def canon(df: pd.DataFrame, sort: bool = True) -> pd.DataFrame:
         if df[c].dtype == object:
             df[c] = df[c].astype(str)
         elif pd.api.types.is_float_dtype(df[c]):
-            # + 0.0 normalizes -0.0 to 0.0 (they hash differently in
-            # hash_pandas_object, so the multiset-hash path would report
-            # a false mismatch the frame-equal path tolerates; ADVICE r4).
-            df[c] = df[c].round(6) + 0.0
+            # Quantize to an integer 1e-6 grid: equal grid points hash
+            # equally in the multiset-hash path (no -0.0 vs 0.0, no
+            # float-repr noise). NaN becomes <NA>.
+            df[c] = pd.Series(np.rint(df[c].to_numpy(dtype="float64") * 1e6),
+                              index=df.index).astype("Int64")
         elif isinstance(df[c].dtype, pd.DatetimeTZDtype) or pd.api.types.is_datetime64_any_dtype(df[c]):
             df[c] = df[c].astype("datetime64[us]").astype(str)
     if not sort:
@@ -61,8 +63,6 @@ BIG_RESULT_ROWS = 200_000
 
 
 def _multiset_hash(df: pd.DataFrame) -> int:
-    import numpy as np
-
     h = pd.util.hash_pandas_object(df, index=False).to_numpy(dtype="uint64")
     with np.errstate(over="ignore"):
         return int(h.sum(dtype="uint64"))
