@@ -27,7 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from globalign_spark.config import unit_cost_params  # noqa: E402
 from globalign_spark.ops import curation, dedup, embeddings, similarity, text as text_ops  # noqa: E402
 from globalign_spark.ops import web as web_ops  # noqa: E402
-from globalign_spark.pipeline import blocking, incremental, metrics  # noqa: E402
+from globalign_spark.pipeline import blocking, incremental, metrics, scoring  # noqa: E402
 from globalign_spark.pipeline.clustering import connected_components  # noqa: E402
 from globalign_spark.pipeline.scoring import score_pairs  # noqa: E402
 
@@ -135,8 +135,7 @@ def q_align_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle-join then repartition pairs, moves every pair's two texts
     # through a full exchange; per-cell scoring cost makes byte-based AQE
     # coalescing pick far too few tasks.)
-    mult = int(os.environ.get("GA_PART_MULT", "2"))
-    a = d.repartition(spark.sparkContext.defaultParallelism * mult).select(
+    a = d.repartition(spark.sparkContext.defaultParallelism * 2).select(
         F.col("doc_id").alias("doc_id_1"), "source", F.col("text").alias("text_1")
     )
     b = d.select(
@@ -227,14 +226,10 @@ def q_er_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     # budget; pairs certified over it come back NULL and fail the filter,
     # at ~2.5x fewer DP cells. Costs that pass are bit-exact (kernel fuzz
     # in tests/test_kernel_parity.py), so edges match the full-DP oracle.
-    scored = score_pairs(pairs, unit_cost_params(), sim_threshold=SIM_THRESHOLD)
-    edges = scored.where(
-        (~F.col("oversize"))
-        & (
-            1.0 - F.col("cost") / F.greatest(F.col("len_1"), F.col("len_2"))
-            >= SIM_THRESHOLD
-        )
-    ).select("id_1", "id_2")
+    scored = scoring.with_similarity(
+        score_pairs(pairs, unit_cost_params(), sim_threshold=SIM_THRESHOLD)
+    )
+    edges = scored.where(scoring.is_edge(SIM_THRESHOLD)).select("id_1", "id_2")
     comps = connected_components(edges, src="id_1", dst="id_2")
     return comps.select(F.col("id").alias("doc_id"), "component")
 
@@ -283,40 +278,15 @@ def q_er_lsh_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cand_to_edges(d: DataFrame, cand: DataFrame) -> DataFrame:
-    """Candidate pairs (id_1, id_2) -> above-threshold edges: broadcast
-    text attach, pair-hash repartition (byte-blind AQE under-parallelizes
-    compute-heavy pair rows), banded alignment scoring, threshold."""
-    spark = d.sparkSession
-    t = d.select("doc_id", "text")
-    pairs = (
-        cand.select("id_1", "id_2")
-        .join(
-            F.broadcast(
-                t.select(F.col("doc_id").alias("id_1"),
-                         F.col("text").alias("text_1"))
-            ),
-            "id_1",
-        )
-        .join(
-            F.broadcast(
-                t.select(F.col("doc_id").alias("id_2"),
-                         F.col("text").alias("text_2"))
-            ),
-            "id_2",
-        )
-        .repartition(
-            spark.sparkContext.defaultParallelism * 2,
-            F.xxhash64("id_1", "id_2"),
-        )
+    """Candidate pairs (id_1, id_2) -> above-threshold edges through the
+    batch pipeline's own s3/s4 path: ``blocking.attach_texts`` (text
+    attach + pair-hash repartition), banded ``score_pairs``,
+    ``with_similarity`` and the s4 edge predicate ``is_edge``."""
+    pairs = blocking.attach_texts(cand.select("id_1", "id_2"), d, "doc_id", "text")
+    scored = scoring.with_similarity(
+        score_pairs(pairs, unit_cost_params(), sim_threshold=SIM_THRESHOLD)
     )
-    scored = score_pairs(pairs, unit_cost_params(), sim_threshold=SIM_THRESHOLD)
-    return scored.where(
-        (~F.col("oversize"))
-        & (
-            1.0 - F.col("cost") / F.greatest(F.col("len_1"), F.col("len_2"))
-            >= SIM_THRESHOLD
-        )
-    ).select("id_1", "id_2")
+    return scored.where(scoring.is_edge(SIM_THRESHOLD)).select("id_1", "id_2")
 
 
 # Deterministic old/new split for the incremental-ER demonstration: ~25%

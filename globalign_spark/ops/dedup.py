@@ -264,9 +264,17 @@ def pairs_from_band_rows(
     probe_ids: DataFrame | None = None,
 ) -> DataFrame:
     """Capped LSH candidate pairs (id_1 < id_2) from (_id, band_id,
-    band_hash) rows — the tail of :func:`dedup_minhash_lsh`, callable
-    directly against a checkpointed/materialized band-rows table (see
-    pipeline/incremental.py for the per-batch use).
+    band_hash) rows: bucket sizes, over-``bucket_cap`` buckets dropped
+    whole, self-join on the band key, distinct. The one capped
+    band-bucket join; its callers are
+
+    * :func:`dedup_minhash_lsh` (its tail) and the MinHash/ER oracle
+      queries in ``__spark_entry__``;
+    * ``pipeline.blocking.lsh_candidates``, the batch pipeline's main
+      LSH pass (under-cap buckets);
+    * ``pipeline.incremental.incremental_candidates_from_bands`` in
+      probe mode, the per-batch path of incremental and streaming ER,
+      against a checkpointed band-rows table.
 
     ``screen_min_eq`` (requires band rows built with ``carry_sig=True``)
     keeps only pairs whose signatures agree on >= that many positions —
@@ -281,12 +289,13 @@ def pairs_from_band_rows(
     whatever text-attach join follows — as shuffle bytes.
 
     ``probe_ids`` (one id column) restricts the LEFT side of the pair
-    join to those ids before expansion — the singleton-rescue shape
-    (pipeline/blocking.rescue_candidates): only the probe set pays the
-    pair expansion, so an aggressive banding (2 rows per band) against a
-    10^12-row band table costs O(|probe| * bucket_cap * bands), not
-    O(corpus^2). Output pairs still satisfy id_1 < id_2 and every pair
-    touches >= 1 probe id."""
+    join to those ids before expansion — the singleton-rescue and
+    incremental-batch shape: only the probe set pays the pair expansion,
+    so an aggressive banding (2 rows per band) against a 10^12-row band
+    table costs O(|probe| * bucket_cap * bands), not O(corpus^2), and
+    two non-probe rows of one bucket are never paired. Bucket sizes are
+    still counted over ALL of ``band_rows``. Output pairs still satisfy
+    id_1 < id_2 and every pair touches >= 1 probe id."""
     sizes = band_rows.groupBy("band_id", "band_hash").agg(
         F.count("*").alias("bsz")
     )
@@ -299,10 +308,14 @@ def pairs_from_band_rows(
     a = ok.select("band_id", "band_hash", F.col("_id").alias("id_1"), *extra_a)
     b = ok.select("band_id", "band_hash", F.col("_id").alias("id_2"), *extra_b)
     if probe_ids is not None:
+        # An inner join with the DISTINCT probe ids, not a left-semi join:
+        # the optimizer pushes a semi-join on id_1 through the size join
+        # and any union below it down to the band-table scan, which would
+        # re-shuffle a corpus-sized (bucketed) band table by id.
         probes = probe_ids.select(
             F.col(probe_ids.columns[0]).alias("id_1")
         ).distinct()
-        a = a.join(probes, "id_1", "left_semi")
+        a = a.join(probes, "id_1")
         pairs = a.join(b, ["band_id", "band_hash"]).where(
             F.col("id_1") != F.col("id_2")
         )

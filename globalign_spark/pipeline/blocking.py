@@ -11,9 +11,10 @@ Two complementary blocking strategies, both shuffle-disciplined for the
    The orchestrator checkpoints it as ``s1_signatures``; everything here
    starts from that table. :func:`band_rows` turns it into (band_id,
    band_hash) rows with the one band-key expression
-   (:func:`band_keys_col`), followed by a self-join on the bucket key.
-   Bucket-size capping keeps any band bucket from going quadratic;
-   dropped buckets are *counted*, not silently discarded.
+   (:func:`band_keys_col`), followed by the capped self-join on the
+   bucket key, :func:`ops.dedup.pairs_from_band_rows`. Bucket-size
+   capping keeps any band bucket from going quadratic; dropped buckets
+   are *counted*, not silently discarded.
 
 2. **Sorted-neighborhood within host** (secondary, URL-structure driven).
    Instead of an all-pairs self-join per host — which explodes on hot hosts
@@ -35,7 +36,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..ops.dedup import sig_eq_count
+from ..ops.dedup import pairs_from_band_rows, sig_eq_count
 
 # Corpus-size guard for broadcasting the 15-bit-truncated signature table
 # in the pair screen (see _pair_est_jaccard): ~300 B/doc -> ~600 MB at the
@@ -52,7 +53,17 @@ def band_keys_col(signature, num_bands: int, width: int):
     """array of per-band keys over the first ``width`` signature
     positions: band b = xxhash64(b, slice b of ``width // num_bands``
     rows), all JVM-side. NULL for a NULL signature, so a document without
-    text has no band rows."""
+    text has no band rows.
+
+    Raises ValueError when a band would get no rows: an empty slice
+    hashes alike for every document, so every document would share every
+    such bucket."""
+    if num_bands < 1 or width < num_bands:
+        raise ValueError(
+            f"cannot band {width} signature positions into "
+            f"num_bands={num_bands} bands of at least one row each; "
+            f"num_bands must be between 1 and {width}"
+        )
     rows = width // num_bands
     return F.when(
         signature.isNotNull(),
@@ -134,31 +145,10 @@ def lsh_candidates(
     """
     with_sig = sig_df.select("_id", "signature")
     bands = band_rows(with_sig, num_bands, band_width or num_perm)
-    # Bucket-size accounting; cap protects against degenerate buckets
-    # (boilerplate pages) going quadratic.
-    sizes = bands.groupBy("band_id", "band_hash").agg(F.count("*").alias("bsz"))
-    stats = sizes.agg(
-        F.count("*").alias("n_buckets"),
-        F.sum(F.when(F.col("bsz") > bucket_cap, 1).otherwise(0)).alias(
-            "n_buckets_over_cap"
-        ),
-        F.sum(F.when(F.col("bsz") > bucket_cap, F.col("bsz")).otherwise(0)).alias(
-            "n_rows_in_over_cap"
-        ),
-        F.max("bsz").alias("max_bucket"),
-    )
-    ok = bands.join(
-        sizes.where(F.col("bsz") <= bucket_cap).drop("bsz"),
-        ["band_id", "band_hash"],
-    )
-    a = ok.select("band_id", "band_hash", F.col("_id").alias("id_1"))
-    b = ok.select("band_id", "band_hash", F.col("_id").alias("id_2"))
-    pairs = (
-        a.join(b, ["band_id", "band_hash"])
-        .where(F.col("id_1") < F.col("id_2"))
-        .select("id_1", "id_2")
-        .distinct()
-    )
+    # Under-cap buckets expand through the one capped band-bucket join;
+    # the cap keeps degenerate (boilerplate) buckets from going quadratic.
+    sizes, stats = _bucket_sizes(bands, bucket_cap)
+    pairs = pairs_from_band_rows(bands, bucket_cap)
     # Over-cap buckets are REFINED, not dropped (50k-entity evidence run,
     # round 3): generic shingle collisions make bucket sizes grow with the
     # corpus — at ~100k pages, 111 buckets blew past the cap carrying half
@@ -220,6 +210,26 @@ def lsh_candidates(
     else:
         stats = stats.withColumn("n_screened_out", F.lit(0))
     return pairs, stats
+
+
+def _bucket_sizes(
+    bands: DataFrame, bucket_cap: int
+) -> tuple[DataFrame, DataFrame]:
+    """(sizes, stats) of a band-rows table: sizes(band_id, band_hash, bsz)
+    per bucket, and the 1-row bucket accounting an LSH pass reports
+    (bucket count, buckets over ``bucket_cap``, rows in them, largest
+    bucket) — what the cap drops is counted, never silent."""
+    sizes = bands.groupBy("band_id", "band_hash").agg(F.count("*").alias("bsz"))
+    over = F.col("bsz") > bucket_cap
+    stats = sizes.agg(
+        F.count("*").alias("n_buckets"),
+        F.sum(F.when(over, 1).otherwise(0)).alias("n_buckets_over_cap"),
+        F.sum(F.when(over, F.col("bsz")).otherwise(0)).alias(
+            "n_rows_in_over_cap"
+        ),
+        F.max("bsz").alias("max_bucket"),
+    )
+    return sizes, stats
 
 
 def _pair_est_jaccard(
@@ -361,28 +371,17 @@ def rescue_candidates(
     # OOM the driver at scale), and lands in stats as lineage.
     n_probes = probes.count()
     probe_bands = bands.join(probes, "_id", "left_semi")
-    sizes = (
-        bands.select("band_id", "band_hash")
-        .groupBy("band_id", "band_hash")
-        .agg(F.count("*").alias("bsz"))
-    )
-    stats = sizes.agg(
-        F.count("*").alias("n_buckets"),
-        F.sum(F.when(F.col("bsz") > bucket_cap, 1).otherwise(0)).alias(
-            "n_buckets_over_cap"
-        ),
-        F.sum(F.when(F.col("bsz") > bucket_cap, F.col("bsz")).otherwise(0)).alias(
-            "n_rows_in_over_cap"
-        ),
-        F.max("bsz").alias("max_bucket"),
-    )
+    sizes, stats = _bucket_sizes(bands, bucket_cap)
     ok = bands.join(
         sizes.where(F.col("bsz") <= bucket_cap).drop("bsz"),
         ["band_id", "band_hash"],
     )
     # Probe rows keep their identity on the LEFT (id_1 = probe) so the
     # per-probe top-k window below has a key; normalization to
-    # (least, greatest) happens after the screen.
+    # (least, greatest) happens after the screen. That orientation and
+    # the n_probes-sized broadcast guard are why this pass keeps its own
+    # probe join instead of ops.dedup.pairs_from_band_rows(probe_ids=...),
+    # which emits normalized pairs.
     probe_side = probe_bands.select(
         "band_id", "band_hash", F.col("_id").alias("id_1")
     )

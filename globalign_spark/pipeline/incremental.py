@@ -5,14 +5,18 @@ At 10^12 pages a daily crawl adds ~10^9 documents; recomputing blocking +
 scoring + clustering over everything per batch is off by three orders of
 magnitude. This module maintains the batch pipeline's output exactly:
 
-  incremental_candidates  LSH candidate pairs touching >=1 new doc. Only
-                          buckets that contain a new document are joined,
-                          so shuffle volume is proportional to the new
-                          batch's bucket activity, not the corpus. In
-                          production the banded-signature table
-                          (ops.dedup.lsh_band_rows) is checkpointed and
-                          bucketed by (band_id, band_hash); a new batch
-                          appends its B rows/doc and probes in place.
+  incremental_candidates_from_bands
+                          LSH candidate pairs touching >=1 new doc. The
+                          old corpus is read only through its
+                          checkpointed banded-signature table
+                          (ops.dedup.lsh_band_rows, bucketed by
+                          (band_id, band_hash)); only buckets that
+                          contain a new document are joined, through the
+                          one capped band-bucket join
+                          (ops.dedup.pairs_from_band_rows) with the new
+                          ids as probes, so shuffle volume is
+                          proportional to the new batch's bucket
+                          activity, not the corpus.
   incremental_components  merge new above-threshold edges into an existing
                           (id, component) assignment, recomputing ONLY the
                           components an edge touches.
@@ -45,62 +49,27 @@ from globalign_spark.ops import dedup
 from globalign_spark.pipeline.clustering import connected_components
 
 
-def incremental_candidates(
-    docs: DataFrame,
-    new_col: str = "is_new",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-    num_perm: int = 16,
-    num_bands: int = 4,
-    bucket_cap: int = 500,
-    band_perm: int | None = None,
-    screen_min_eq: int | None = None,
-) -> DataFrame:
-    """Candidate pairs (id_1 < id_2, new_1, new_2) with >=1 new endpoint.
-
-    ``docs`` is the union corpus with a boolean ``new_col`` marking the
-    incoming batch. Signatures are computed here for both sides to keep the
-    function self-contained; at scale the old side's band rows come from
-    the checkpointed signature table instead (see module docstring) and
-    only the `hot`/`touched` joins below run per batch.
-    """
-    # The band rows feed the hot-bucket filter, the bucket-size count and
-    # both sides of the pair join. Not persisted — measured 5x slower at
-    # sf0.1 (cache barrier + lost broadcast planning; see the
-    # dedup_minhash_lsh docstring). Production reads the checkpointed
-    # band_rows table here, so only the joins below run per batch.
-    bands = dedup.lsh_band_rows(
-        docs, id_col, text_col, k, num_perm, num_bands,
-        band_perm=band_perm, carry_sig=screen_min_eq is not None,
-    ).join(
-        docs.select(F.col(id_col).alias("_id"), F.col(new_col).alias("_new")),
-        "_id",
-    )
-    # Buckets containing >=1 new doc are small relative to the corpus's
-    # full bucket set (B rows per new doc), so the probe join inside the
-    # shared helper broadcasts at real batch/corpus ratios; local mode
-    # lets AQE pick.
-    return _pairs_from_flagged_bands(bands, bucket_cap, screen_min_eq)
-
-
 def incremental_candidates_from_bands(
     old_bands: DataFrame,
     new_bands: DataFrame,
     bucket_cap: int = 500,
     screen_min_eq: int | None = None,
 ) -> DataFrame:
-    """The production per-batch form of :func:`incremental_candidates`.
+    """Capped LSH candidate pairs (id_1 < id_2) with >=1 new endpoint:
+    exactly the pairs a batch run over old ∪ new finds that touch a new
+    document.
 
     ``old_bands`` is the checkpointed banded-signature table of the existing
     corpus — ``(_id, band_id, band_hash)`` as written by
     :func:`ops.dedup.lsh_band_rows`, stored bucketed by
-    ``(band_id, band_hash)`` (pipeline.bucketing) so the probe joins below
-    are shuffle-free on the big side. ``new_bands`` is the incoming batch's
+    ``(band_id, band_hash)`` (pipeline.bucketing) so the probe join below
+    is shuffle-free on the big side. ``new_bands`` is the incoming batch's
     band rows, computed ONCE by the caller (``lsh_band_rows(new_batch)``),
     appended to the checkpoint table for the next batch and passed here for
     this batch's probe. Ids must be disjoint between the two sides (a crawl
-    batch mints new doc ids).
+    batch mints new doc ids). ``screen_min_eq`` applies the in-join
+    signature screen of :func:`ops.dedup.pairs_from_band_rows`; both
+    sides must then carry a ``sig`` column (``carry_sig=True``).
 
     Only signatures for the NEW batch are ever computed — the old corpus is
     touched exclusively through the checkpointed table, which is what makes
@@ -110,78 +79,23 @@ def incremental_candidates_from_bands(
     re-shuffle the whole corpus): every new row's bucket is hot by
     definition, so touched = (old_bands ⋈ hot) ∪ new_bands — the only join
     against the corpus-sized table is bucket-local against the batch-sized
-    hot set, and everything downstream is touched-sized. Returns the same
-    (id_1, id_2, new_1, new_2) frame as :func:`incremental_candidates`
-    (proved equal in
-    tests/test_pipeline_e2e.py::test_incremental_from_bands_equivalence).
+    hot set. The touched rows are whole buckets, so
+    :func:`ops.dedup.pairs_from_band_rows` caps on full bucket sizes; its
+    probe mode, with the new ids as probes, never forms an old–old pair.
     """
-    sig = (["sig"] if screen_min_eq is not None else [])
-    new = new_bands.select(
-        "_id", "band_id", "band_hash", *sig, F.lit(True).alias("_new")
-    )
+    cols = ["_id", "band_id", "band_hash"]
+    if screen_min_eq is not None:
+        cols.append("sig")
+    new = new_bands.select(*cols)
     hot = new.select("band_id", "band_hash").distinct()
     touched = (
-        old_bands.select(
-            "_id", "band_id", "band_hash", *sig, F.lit(False).alias("_new")
-        )
+        old_bands.select(*cols)
         .join(hot, ["band_id", "band_hash"])
         .unionByName(new)
     )
-    return _pairs_from_touched(touched, bucket_cap, screen_min_eq)
-
-
-def _pairs_from_flagged_bands(
-    bands: DataFrame, bucket_cap: int, screen_min_eq: int | None = None
-) -> DataFrame:
-    """Hot-bucket probe for the self-contained path: bands is
-    (_id, band_id, band_hash[, sig], _new); emits capped candidate pairs
-    with >=1 new endpoint."""
-    hot = (
-        bands.where(F.col("_new"))
-        .select("band_id", "band_hash")
-        .distinct()
+    return dedup.pairs_from_band_rows(
+        touched, bucket_cap, screen_min_eq, probe_ids=new.select("_id")
     )
-    touched = bands.join(hot, ["band_id", "band_hash"])
-    return _pairs_from_touched(touched, bucket_cap, screen_min_eq)
-
-
-def _pairs_from_touched(
-    touched: DataFrame, bucket_cap: int, screen_min_eq: int | None = None
-) -> DataFrame:
-    """Capped pair join over probed band rows. The skew cap counts FULL
-    bucket size (probed buckets are counted whole) so drops match a batch
-    run over the union corpus. ``screen_min_eq`` applies the signature
-    screen (ops.dedup.pairs_from_band_rows) on the streaming join output,
-    before the distinct — band rows must carry a ``sig`` column."""
-    sizes = touched.groupBy("band_id", "band_hash").agg(
-        F.count("*").alias("bsz")
-    )
-    ok = touched.join(
-        sizes.where(F.col("bsz") <= bucket_cap).drop("bsz"),
-        ["band_id", "band_hash"],
-    )
-    screening = screen_min_eq is not None
-    extra_a = [F.col("sig").alias("sig_1")] if screening else []
-    extra_b = [F.col("sig").alias("sig_2")] if screening else []
-    a = ok.select(
-        "band_id", "band_hash",
-        F.col("_id").alias("id_1"), F.col("_new").alias("new_1"), *extra_a,
-    )
-    b = ok.select(
-        "band_id", "band_hash",
-        F.col("_id").alias("id_2"), F.col("_new").alias("new_2"), *extra_b,
-    )
-    pairs = (
-        a.join(b, ["band_id", "band_hash"])
-        .where(F.col("id_1") < F.col("id_2"))
-        .where(F.col("new_1") | F.col("new_2"))
-    )
-    if screening:
-        pairs = pairs.where(
-            dedup.sig_eq_count(F.col("sig_1"), F.col("sig_2"))
-            >= F.lit(screen_min_eq)
-        )
-    return pairs.select("id_1", "id_2", "new_1", "new_2").distinct()
 
 
 def incremental_components(

@@ -355,10 +355,9 @@ def run_pipeline(
 
     edges = ck.write(
         "s4_edges",
-        scored.where(
-            (~F.col("oversize"))
-            & (F.col("similarity") >= cfg.similarity_threshold)
-        ).select("id_1", "id_2", "similarity"),
+        scored.where(scoring.is_edge(cfg.similarity_threshold)).select(
+            "id_1", "id_2", "similarity"
+        ),
     )
 
     if cfg.rescue_singletons:
@@ -414,8 +413,7 @@ def run_pipeline(
             rescue_edges = ck.write(
                 "s4b_rescue_edges",
                 r_scored.where(
-                    (~F.col("oversize"))
-                    & (F.col("similarity") >= cfg.similarity_threshold)
+                    scoring.is_edge(cfg.similarity_threshold)
                 ).select("id_1", "id_2", "similarity"),
                 meta={"rescue_bucket_stats": stats_row},
             )

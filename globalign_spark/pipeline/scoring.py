@@ -30,7 +30,7 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql.types import (
     BooleanType,
     LongType,
@@ -47,9 +47,7 @@ from ..kernel import CompiledParams, align_cost_batch
 # (B ~ 186 at 300x300) maximizes aggregate throughput (51.5k pairs/s);
 # smaller batches pay numpy-call overhead per DP row, larger ones spill the
 # rolling int16 lattices out of the shared L3.
-BATCH_CELL_BUDGET = int(
-    __import__("os").environ.get("GA_BATCH_CELL_BUDGET", 1 << 24)
-)
+BATCH_CELL_BUDGET = 1 << 24
 
 
 def _in_alpha_mask(
@@ -480,3 +478,9 @@ def with_similarity(scored: DataFrame) -> DataFrame:
             1.0 - F.col("cost") / F.greatest(F.col("len_1"), F.col("len_2"))
         ),
     )
+
+
+def is_edge(sim_threshold: float) -> Column:
+    """The edge predicate of stages s4 and s4b over :func:`with_similarity`
+    output: an in-cap pair whose similarity reaches ``sim_threshold``."""
+    return (~F.col("oversize")) & (F.col("similarity") >= sim_threshold)

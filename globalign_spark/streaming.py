@@ -228,8 +228,11 @@ def stream_incremental_er(
     double-applying it.
 
     ``edge_fn(docs, cand) -> DataFrame(id_1, id_2)`` turns candidate
-    pairs into edges (e.g. alignment-score threshold); default keeps
-    every LSH candidate (pure near-dup clustering).
+    pairs into edges (e.g. alignment-score threshold). ``docs`` is the
+    corpus so far, (``id_col``, ``text_col``, is_new); ``cand`` is the
+    batch's candidate pairs (id_1, id_2), id_1 < id_2, each touching
+    >= 1 new document. Default keeps every LSH candidate (pure near-dup
+    clustering).
 
     Returns the foreachBatch-ready ``StreamingQuery``.
     """
@@ -307,7 +310,7 @@ def stream_incremental_er(
                     )
                 edges = edge_fn(corpus, cand)
             else:
-                edges = cand.select("id_1", "id_2")
+                edges = cand
             if old_assign is None:
                 from globalign_spark.pipeline.clustering import (
                     connected_components,

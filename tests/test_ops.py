@@ -431,7 +431,9 @@ def test_incremental_equals_batch_under_cap_pressure(spark):
     bucket size, so its drops match a batch run even when a hot bucket
     straddles the old/new split - the equivalence the oracle row proves
     uncapped must also hold capped."""
-    from globalign_spark.pipeline.incremental import incremental_candidates
+    from globalign_spark.pipeline.incremental import (
+        incremental_candidates_from_bands,
+    )
 
     bomb = [(i, "subscribe to our newsletter for daily updates and offers")
             for i in range(80)]
@@ -444,7 +446,7 @@ def test_incremental_equals_batch_under_cap_pressure(spark):
         for i in range(40)
     ]
     docs = spark.createDataFrame(bomb + normal, "doc_id long, text string")
-    flagged = docs.withColumn("is_new", F.col("doc_id") % 4 == 0)
+    is_new = F.col("doc_id") % 4 == 0
 
     cap = 30  # bomb bucket (80) over cap; normal buckets under
     batch = {
@@ -453,7 +455,11 @@ def test_incremental_equals_batch_under_cap_pressure(spark):
     }
     incr = {
         (r.id_1, r.id_2)
-        for r in incremental_candidates(flagged, bucket_cap=cap).collect()
+        for r in incremental_candidates_from_bands(
+            dedup.lsh_band_rows(docs.where(~is_new)),
+            dedup.lsh_band_rows(docs.where(is_new)),
+            bucket_cap=cap,
+        ).collect()
     }
     assert incr == {p for p in batch if p[0] % 4 == 0 or p[1] % 4 == 0}
 
@@ -706,6 +712,16 @@ def test_kind_dispatch_video_end_to_end(spark):
     )
     assert out[1].features is None
     assert "NotImplementedError" in out[1].decode_error
+
+
+def test_band_rows_reject_empty_bands(docs):
+    """More bands than signature positions would give empty bands that
+    every document shares; banding refuses, naming both values."""
+    with pytest.raises(ValueError, match="16.*num_bands=32"):
+        dedup.lsh_band_rows(docs, num_perm=16, num_bands=32)
+    with pytest.raises(ValueError, match="num_bands=0"):
+        dedup.lsh_band_rows(docs, num_perm=16, num_bands=0)
+    assert dedup.lsh_band_rows(docs, num_perm=16, num_bands=16).count() == 96
 
 
 def test_pairs_from_band_rows_probe_mode(docs, spark):

@@ -303,27 +303,105 @@ def test_incremental_candidates_completeness(spark):
     """Every batch LSH candidate pair with >=1 new endpoint is produced,
     and no old-old pair is (those are the previous run's responsibility)."""
     from globalign_spark.ops import dedup
-    from globalign_spark.pipeline.incremental import incremental_candidates
+    from globalign_spark.pipeline.incremental import (
+        incremental_candidates_from_bands,
+    )
 
+    docs = _fox_docs(spark)
+    batch = {
+        (r.id_1, r.id_2)
+        for r in dedup.dedup_minhash_lsh(docs, bucket_cap=10**9).collect()
+    }
+    cand = incremental_candidates_from_bands(
+        dedup.lsh_band_rows(docs.where(F.col("doc_id") % 4 != 0)),
+        dedup.lsh_band_rows(docs.where(F.col("doc_id") % 4 == 0)),
+        bucket_cap=10**9,
+    )
+    assert cand.columns == ["id_1", "id_2"]
+    incr = {(r.id_1, r.id_2) for r in cand.collect()}
+    want = {p for p in batch if p[0] % 4 == 0 or p[1] % 4 == 0}
+    assert incr == want and incr
+    assert all(a % 4 == 0 or b % 4 == 0 for a, b in incr)
+
+
+def test_incremental_from_bands_equivalence(spark, tmp_path):
+    """The production per-batch path reads the old side from a checkpointed
+    banded-signature table.  Round-tripping the old band rows through
+    parquet must give exactly the pairs of the in-memory band rows, which
+    equal the batch run's new-touching pairs."""
+    from globalign_spark.ops import dedup
+    from globalign_spark.pipeline.incremental import (
+        incremental_candidates_from_bands,
+    )
+
+    docs = _fox_docs(spark)
+    old_bands = dedup.lsh_band_rows(docs.where(F.col("doc_id") % 4 != 0))
+    new_bands = dedup.lsh_band_rows(docs.where(F.col("doc_id") % 4 == 0))
+    path = str(tmp_path / "band_rows")
+    old_bands.write.parquet(path)
+
+    def pairs(old):
+        return {
+            (r.id_1, r.id_2)
+            for r in incremental_candidates_from_bands(
+                old, new_bands, bucket_cap=10**9
+            ).collect()
+        }
+
+    got = pairs(spark.read.parquet(path))
+    batch = {
+        (r.id_1, r.id_2)
+        for r in dedup.dedup_minhash_lsh(docs, bucket_cap=10**9).collect()
+    }
+    assert got == pairs(old_bands) and len(got) > 0
+    assert got == {p for p in batch if p[0] % 4 == 0 or p[1] % 4 == 0}
+
+
+def _fox_docs(spark):
     base = (
         "the quick brown fox jumps over the lazy dog near the river bank "
         "while the sun sets slowly behind the quiet hills tonight"
     )
     rows = [(i, base[:60 + (i % 7) * 9] + f" tail{i % 3}") for i in range(40)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    flagged = docs.withColumn("is_new", F.col("doc_id") % 4 == 0)
+    return spark.createDataFrame(rows, "doc_id long, text string")
 
+
+def test_incremental_candidates_with_signature_screen(spark):
+    """Probe mode with the in-join signature screen (64 perms, banding on
+    the first 16, >= 32 equal positions) equals the batch run's screened
+    pairs that touch a new document."""
+    from globalign_spark.ops import dedup
+    from globalign_spark.pipeline.incremental import (
+        incremental_candidates_from_bands,
+    )
+
+    docs = pages_df(spark, 60, seed=13).select(
+        F.col("url").alias("doc_id"), F.col("text")
+    )
+    is_new = F.xxhash64("doc_id") % 4 == 0
+    lsh = dict(num_perm=64, num_bands=4, band_perm=16)
+
+    def bands(d):
+        return dedup.lsh_band_rows(d, **lsh, carry_sig=True)
+
+    new_ids = {r.doc_id for r in docs.where(is_new).collect()}
     batch = {
         (r.id_1, r.id_2)
-        for r in dedup.dedup_minhash_lsh(docs, bucket_cap=10**9).collect()
+        for r in dedup.dedup_minhash_lsh(
+            docs, bucket_cap=10**9, screen_min_eq=32, **lsh
+        ).collect()
     }
-    incr = {
+    unscreened = dedup.dedup_minhash_lsh(docs, bucket_cap=10**9, **lsh)
+    got = {
         (r.id_1, r.id_2)
-        for r in incremental_candidates(flagged, bucket_cap=10**9).collect()
+        for r in incremental_candidates_from_bands(
+            bands(docs.where(~is_new)), bands(docs.where(is_new)),
+            bucket_cap=10**9, screen_min_eq=32,
+        ).collect()
     }
-    want = {p for p in batch if p[0] % 4 == 0 or p[1] % 4 == 0}
-    assert incr == want
-    assert all(a % 4 == 0 or b % 4 == 0 for a, b in incr)
+    want = {p for p in batch if p[0] in new_ids or p[1] in new_ids}
+    assert got == want and got
+    assert len(batch) < unscreened.count()  # the screen drops pairs here
 
 
 def test_incremental_components_random_graphs(spark):
@@ -367,48 +445,6 @@ def test_incremental_components_random_graphs(spark):
             ).collect()
         }
         assert got == exp, f"trial {trial} cut {cut}"
-
-
-def test_incremental_from_bands_equivalence(spark, tmp_path):
-    """The production per-batch path — old side read from a checkpointed
-    banded-signature table, new side's bands computed once — must produce
-    exactly the same candidate pairs as incremental_candidates over the
-    flagged union corpus (which itself equals the batch run's new-touching
-    pairs; see test_incremental_candidates_completeness)."""
-    from globalign_spark.ops import dedup
-    from globalign_spark.pipeline.incremental import (
-        incremental_candidates,
-        incremental_candidates_from_bands,
-    )
-
-    base = (
-        "the quick brown fox jumps over the lazy dog near the river bank "
-        "while the sun sets slowly behind the quiet hills tonight"
-    )
-    rows = [(i, base[:60 + (i % 7) * 9] + f" tail{i % 3}") for i in range(40)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    old = docs.where(F.col("doc_id") % 4 != 0)
-    new = docs.where(F.col("doc_id") % 4 == 0)
-
-    # Previous run checkpointed its band rows; round-trip through parquet
-    # like the orchestrator would.
-    path = str(tmp_path / "band_rows")
-    dedup.lsh_band_rows(old).write.parquet(path)
-    old_bands = spark.read.parquet(path)
-    new_bands = dedup.lsh_band_rows(new)
-
-    got = {
-        (r.id_1, r.id_2, r.new_1, r.new_2)
-        for r in incremental_candidates_from_bands(
-            old_bands, new_bands, bucket_cap=10**9
-        ).collect()
-    }
-    flagged = docs.withColumn("is_new", F.col("doc_id") % 4 == 0)
-    exp = {
-        (r.id_1, r.id_2, r.new_1, r.new_2)
-        for r in incremental_candidates(flagged, bucket_cap=10**9).collect()
-    }
-    assert got == exp and len(got) > 0
 
 
 def test_blocking_quality_metrics(spark):
